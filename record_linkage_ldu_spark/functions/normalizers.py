@@ -21,6 +21,7 @@ Semantics notes vs the reference:
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -31,6 +32,7 @@ from ..config import (
     NAME_STOPWORDS,
     STATE_LOOKUP,
 )
+from ..session import built_once
 
 # ------------------------------------------------------------------
 # token-pipeline helpers
@@ -69,8 +71,15 @@ def _tokens(
 def _remove_stopwords(toks: Column, stopwords: tuple[str, ...]) -> Column:
     # isin over a literal list optimizes to InSet (one static hash set
     # per expression instance) — cheaper than a per-token linear
-    # array_contains scan over the ~180-word corpus.
-    return F.filter(toks, lambda t: ~t.isin(*stopwords))
+    # array_contains scan over the ~180-word corpus.  The word list is
+    # one JVM Seq built once per gateway: ``isin(*stopwords)`` would
+    # cost ~4 py4j round-trips per word on every build, for the same
+    # InSet.
+    words = built_once(
+        ("stopwords", stopwords),
+        lambda: SparkContext._jvm.PythonUtils.toSeq(list(stopwords)),
+    )
+    return F.filter(toks, lambda t: ~Column(t._jc.isin(words)))
 
 
 def _join_tokens(toks: Column, *, sort: bool) -> Column:
@@ -132,7 +141,12 @@ def normalize_website(c: Column) -> Column:
 
 
 def _map_lookup(c: Column, mapping: dict[str, str]) -> Column:
-    m = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
+    # the literal map is one Column built once per gateway
+    items = tuple(mapping.items())
+    m = built_once(
+        ("literal_map", items),
+        lambda: F.create_map(*[F.lit(x) for kv in items for x in kv]),
+    )
     # try_element_at: NULL (not ANSI error) on missing key -> fallback
     return F.coalesce(F.try_element_at(m, F.lower(F.trim(c))), c)
 

@@ -298,11 +298,18 @@ def _jvm_kernels_available(spark) -> bool:
     return ok
 
 
-def _kernel_call(name: str, udf_fallback, a: Column, b: Column) -> Column:
+def jvm_kernels_active() -> bool:
+    """Whether kernel columns built now call the compiled JVM kernels
+    (registering them on the active session) rather than the Arrow
+    UDF fallback."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
-    if spark is not None and _jvm_kernels_available(spark):
+    return spark is not None and _jvm_kernels_available(spark)
+
+
+def _kernel_call(name: str, udf_fallback, a: Column, b: Column) -> Column:
+    if jvm_kernels_active():
         return F.call_udf(name, a, b)
     return udf_fallback(a, b)
 

@@ -34,6 +34,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import built_once
+
 
 @dataclass(frozen=True)
 class BlockingConfig:
@@ -85,19 +87,38 @@ class BlockingConfig:
     qgram_max_df: int = 50
 
 
+def _name_fields(columns: list[str], cfg: BlockingConfig) -> tuple[str, ...]:
+    return tuple(
+        c for c in (cfg.name_field, *cfg.fallback_name_fields) if c in columns
+    )
+
+
+def _name_col(fields: tuple[str, ...]) -> Column:
+    return built_once(
+        ("name_expr", fields),
+        lambda: (
+            F.coalesce(*[F.col(c) for c in fields])
+            if len(fields) > 1
+            else F.col(fields[0])
+        ),
+    )
+
+
 def name_expr(records: DataFrame, cfg: BlockingConfig) -> Column:
     """The blocking name: the configured name field coalesced with its
     fallbacks (company_name by default) — shared by the key families
     and both sorted-neighborhood passes."""
-    name_fields = [
-        c
-        for c in (cfg.name_field, *cfg.fallback_name_fields)
-        if c in records.columns
-    ]
-    return (
-        F.coalesce(*[F.col(c) for c in name_fields])
-        if len(name_fields) > 1
-        else F.col(name_fields[0])
+    return _name_col(_name_fields(records.columns, cfg))
+
+
+def sn_name_key(records: DataFrame, cfg: BlockingConfig) -> tuple[Column, Column]:
+    """The sorted-neighborhood sort key (the blocking name) and the
+    predicate that keeps the records having one."""
+    fields = _name_fields(records.columns, cfg)
+    name = _name_col(fields)
+    return name, built_once(
+        ("sn_has_name", fields),
+        lambda: name.isNotNull() & (name != ""),
     )
 
 
@@ -115,7 +136,32 @@ def block_keys(records: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> Da
     silent drop tier) and duplicate pair-join rows.  Callers with raw
     inputs must dropDuplicates(["doc_id"]) first.
     """
-    name = name_expr(records, cfg)
+    columns = records.columns
+    fields = _name_fields(columns, cfg)
+    # dedupe defensively: a repeated entry in cfg.contact_fields would
+    # emit the same key twice per record, silently doubling block_size
+    # in the census (same tier-shift failure as duplicated doc_ids)
+    contacts = tuple(
+        dict.fromkeys(f for f in cfg.contact_fields if f in columns)
+    )
+    families = (
+        cfg.use_soundex,
+        cfg.use_soundex_single,
+        cfg.use_nysiis,
+        cfg.use_nickname_soundex,
+        cfg.use_sorted_neighborhood and cfg.sn_prefix,
+    )
+    key, has_key = built_once(
+        ("block_keys", fields, contacts, families),
+        lambda: _block_key_columns(fields, contacts, cfg),
+    )
+    return records.select("doc_id", key).where(has_key)
+
+
+def _block_key_columns(
+    fields: tuple[str, ...], contacts: tuple[str, ...], cfg: BlockingConfig
+) -> tuple[Column, Column]:
+    name = _name_col(fields)
     first_tok = F.try_element_at(F.split(name, " "), F.lit(1))
     second_tok = F.coalesce(
         F.try_element_at(F.split(name, " "), F.lit(2)), F.lit("")
@@ -178,14 +224,7 @@ def block_keys(records: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> Da
             )
         )
     prefixes = {"phone": "ph:", "email": "em:", "zip": "zp:", "fax": "fx:"}
-    seen: set[str] = set()
-    # dedupe defensively: a repeated entry in cfg.contact_fields would
-    # emit the same key twice per record, silently doubling block_size
-    # in the census (same tier-shift failure as duplicated doc_ids)
-    for f_name in cfg.contact_fields:
-        if f_name not in records.columns or f_name in seen:
-            continue
-        seen.add(f_name)
+    for f_name in contacts:
         c = F.col(f_name)
         keys.append(
             F.when(
@@ -201,10 +240,10 @@ def block_keys(records: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> Da
     # shuffle of the entire key table for zero removed rows.  Pair
     # duplicates from multi-key reachability are collapsed once at
     # the pair level (candidate_pairs / generate_candidates).
-    exploded = records.select(
-        "doc_id", F.explode(F.array(*keys)).alias("block_key")
-    ).where(F.col("block_key").isNotNull())
-    return exploded
+    return (
+        F.explode(F.array(*keys)).alias("block_key"),
+        F.col("block_key").isNotNull(),
+    )
 
 
 def block_census(keys: DataFrame) -> DataFrame:
@@ -446,9 +485,9 @@ def generate_candidates(
         )
 
     def _build_sn():
-        name = name_expr(records, cfg)
+        name, has_name = sn_name_key(records, cfg)
         sn = sorted_neighborhood_pairs(
-            records.where(name.isNotNull() & (name != "")),
+            records.where(has_name),
             name,
             window=cfg.sn_window,
             materialize=materialize_keys,

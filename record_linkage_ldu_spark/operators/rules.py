@@ -16,6 +16,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import built_once
+
 
 def cross_rule_masks(df: DataFrame) -> list[Column]:
     """LDU x HW rules (main_ldu_hw.py:408-420)."""
@@ -50,8 +52,11 @@ def self_rule_masks(df: DataFrame) -> list[Column]:
 
 
 def match(df: DataFrame, mode: str) -> DataFrame:
-    masks = cross_rule_masks(df) if mode == "cross" else self_rule_masks(df)
-    return df.where(reduce(lambda x, y: x | y, masks))
+    def build() -> Column:
+        masks = cross_rule_masks(df) if mode == "cross" else self_rule_masks(df)
+        return reduce(lambda x, y: x | y, masks)
+
+    return df.where(built_once(("match", mode), build))
 
 
 def mask_stats(df: DataFrame, mode: str) -> DataFrame:

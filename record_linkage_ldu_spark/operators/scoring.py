@@ -35,7 +35,13 @@ from ..config import (
     SELF_SCORE_FIELDS,
     method_for_field,
 )
-from ..functions.similarity import jw_sim_col, lev_sim_col, ro_sim_col
+from ..functions.similarity import (
+    jvm_kernels_active,
+    jw_sim_col,
+    lev_sim_col,
+    ro_sim_col,
+)
+from ..session import built_once
 
 _SIM = {"lev": lev_sim_col, "ro": ro_sim_col}
 
@@ -74,15 +80,16 @@ def attach_pair_sides(
     so these become shuffle-free.  Cross mode passes different field
     sets per side (hw columns left, ldu columns right).
     """
-    left = records.select(
-        F.col("doc_id").alias("doc_id_1"),
-        *[F.col(f).alias(f"a_{f}") for f in fields],
-    )
+    def side(tag: str, n: int, side_fields) -> list[Column]:
+        return built_once(
+            ("pair_side", tag, tuple(side_fields)),
+            lambda: [F.col("doc_id").alias(f"doc_id_{n}")]
+            + [F.col(f).alias(f"{tag}_{f}") for f in side_fields],
+        )
+
+    left = records.select(*side("a", 1, fields))
     rsrc = records_right if records_right is not None else records
-    right = rsrc.select(
-        F.col("doc_id").alias("doc_id_2"),
-        *[F.col(f).alias(f"b_{f}") for f in (fields_right or fields)],
-    )
+    right = rsrc.select(*side("b", 2, fields_right or fields))
     return pairs.join(left, "doc_id_1").join(right, "doc_id_2")
 
 
@@ -96,17 +103,26 @@ def score_pairs_self(
     Input: wide pair rows from ``attach_pair_sides``.  Output: one row
     per pair with a double score per field + ``total``.
     """
-    cols: list[Column] = []
-    score_cols = []
-    for f in fields:
-        method = method_for_field(f) or "lev"
-        sim = _SIM[method](F.col(f"a_{f}"), F.col(f"b_{f}"))
-        cols.append(sim.alias(f))
-        score_cols.append(f)
-    if with_jw:
-        cols.append(jw_sim_col(F.col("a_name"), F.col("b_name")).alias("jw_name"))
+    def build() -> tuple[list[Column], Column]:
+        cols: list[Column] = []
+        for f in fields:
+            method = method_for_field(f) or "lev"
+            sim = _SIM[method](F.col(f"a_{f}"), F.col(f"b_{f}"))
+            cols.append(sim.alias(f))
+        if with_jw:
+            cols.append(
+                jw_sim_col(F.col("a_name"), F.col("b_name")).alias("jw_name")
+            )
+        total = reduce(lambda x, y: x + y, [F.col(f) for f in fields])
+        return cols, total
+
+    # the kernel path is part of the key: JVM-kernel columns call
+    # functions registered per session, the fallback calls Arrow UDFs
+    cols, total = built_once(
+        ("score_pairs_self", tuple(fields), with_jw, jvm_kernels_active()),
+        build,
+    )
     scored = _score_barrier(pairs_wide, ["doc_id_1", "doc_id_2"], cols)
-    total = reduce(lambda x, y: x + y, [F.col(f) for f in score_cols])
     return scored.withColumn("total", total)
 
 
@@ -172,7 +188,10 @@ def combined_score_col(fields: tuple[str, ...]) -> Column:
 
 def with_combined_score(scored: DataFrame, mode: str) -> DataFrame:
     fields = CROSS_SCORE_FIELDS if mode == "cross" else SELF_SCORE_FIELDS
-    return scored.withColumn("score", combined_score_col(fields))
+    score = built_once(
+        ("combined_score", fields), lambda: combined_score_col(fields)
+    )
+    return scored.withColumn("score", score)
 
 
 def sql_combined_score(fields: tuple[str, ...], prefix: str = "") -> str:

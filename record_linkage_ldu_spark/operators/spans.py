@@ -35,6 +35,7 @@ from ..config import (
     SPAN_FIELD_KINDS,
 )
 from ..functions.normalizers import NORMALIZERS
+from ..session import built_once
 
 SPAN_SCHEMA = ArrayType(
     StructType(
@@ -76,11 +77,15 @@ def extract_fields(
 ) -> DataFrame:
     """documents -> documents + one raw column per field kind +
     ``source``.  Narrow projection; spans carried through untouched."""
-    cols = [F.col("doc_id"), F.col("spans")]
-    cols.append(span_text(SOURCE_KIND).alias("source"))
-    for kind in kinds:
-        cols.append(span_text(kind).alias(kind))
-    return documents.select(*cols)
+
+    def build():
+        cols = [F.col("doc_id"), F.col("spans")]
+        cols.append(span_text(SOURCE_KIND).alias("source"))
+        for kind in kinds:
+            cols.append(span_text(kind).alias(kind))
+        return cols
+
+    return documents.select(*built_once(("extract_fields", kinds), build))
 
 
 def normalize_fields(
@@ -101,17 +106,21 @@ def normalize_fields(
     (VERDICT r4 item 6)."""
     from ..functions.normalizers import normalize_name as _nn
 
-    out = wide
-    exprs = {}
-    for kind in kinds:
-        norm = FIELD_NORMALIZER.get(kind)
-        if norm is None:
-            continue
-        if unicode_names and norm == "name":
-            exprs[kind] = _nn(F.col(kind), unicode_letters=True)
-        else:
-            exprs[kind] = NORMALIZERS[norm](F.col(kind))
-    return out.withColumns(exprs)
+    def build():
+        exprs = {}
+        for kind in kinds:
+            norm = FIELD_NORMALIZER.get(kind)
+            if norm is None:
+                continue
+            if unicode_names and norm == "name":
+                exprs[kind] = _nn(F.col(kind), unicode_letters=True)
+            else:
+                exprs[kind] = NORMALIZERS[norm](F.col(kind))
+        return exprs
+
+    return wide.withColumns(
+        built_once(("normalize_fields", kinds, unicode_names), build)
+    )
 
 
 def span_fingerprint(spans_col: Column = None) -> Column:

@@ -42,6 +42,7 @@ from ..operators.scoring import (
     with_combined_score,
 )
 from ..operators.spans import extract_fields, normalize_fields
+from ..session import built_once
 from ..sources.io import StageStore, input_fingerprint
 
 
@@ -116,23 +117,36 @@ def records_view(documents: DataFrame, cfg: LinkageConfig | None = None) -> Data
     wide = extract_fields(documents)
     if cfg.fold_accents:
         from ..functions.normalizers import fold_accents as _fold
-        from ..operators.spans import SPAN_FIELD_KINDS as _KINDS
 
         wide = wide.withColumns(
-            {k: _fold(F.col(k)) for k in _KINDS if k in wide.columns}
+            built_once(
+                ("fold_accents", SPAN_FIELD_KINDS),
+                lambda: {k: _fold(F.col(k)) for k in SPAN_FIELD_KINDS},
+            )
         )
     wide = normalize_fields(wide, unicode_names=cfg.unicode_names)
-    cols = [F.col("doc_id"), F.col("source"), F.col("spans")]
-    for fam in SELF_COMPARE_FIELDS:
-        members = _FAMILIES.get(fam, (fam,))
-        if cfg.family_coalesce and len(members) > 1:
-            expr = F.coalesce(*[F.col(m) for m in members if m in wide.columns])
-        else:
-            expr = F.col(fam)
-        # normalizers map '' and null alike to missing-equivalent; keep
-        # '' distinct (reference keeps empty strings post-normalization)
-        cols.append(expr.alias(fam))
-    return wide.select(*cols)
+
+    def build():
+        # extract_fields emits exactly doc_id, spans, source and one
+        # column per SPAN_FIELD_KINDS entry
+        cols = [F.col("doc_id"), F.col("source"), F.col("spans")]
+        for fam in SELF_COMPARE_FIELDS:
+            members = _FAMILIES.get(fam, (fam,))
+            if cfg.family_coalesce and len(members) > 1:
+                expr = F.coalesce(
+                    *[F.col(m) for m in members if m in SPAN_FIELD_KINDS]
+                )
+            else:
+                expr = F.col(fam)
+            # normalizers map '' and null alike to missing-equivalent;
+            # keep '' distinct (reference keeps empty strings
+            # post-normalization)
+            cols.append(expr.alias(fam))
+        return cols
+
+    return wide.select(
+        *built_once(("records_view", cfg.family_coalesce), build)
+    )
 
 
 @dataclass

@@ -9,6 +9,7 @@ pandas-UDF kernel, partition counts sized by parallelism.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -102,3 +103,34 @@ def _master_parallelism(master: str, default: int) -> int:
         except ValueError:
             return default
     return default
+
+
+# built_once's cache is process-wide like the gateway it belongs to;
+# the lock makes the gateway check and the build one step (reentrant:
+# a build may call built_once for its own parts)
+_BUILT: dict = {}
+_BUILT_GATEWAY: list = [None]
+_BUILT_LOCK = threading.RLock()
+
+
+def built_once(key, build):
+    """``build()`` once per live py4j gateway, then the cached value.
+
+    For Column trees and JVM literals a plan rebuilds on every call:
+    a Column is an unresolved expression tree, so one built tree binds
+    to any DataFrame of any session on the same JVM, while building it
+    costs a py4j round-trip per node (~700 for one stopword filter).
+    ``key`` must name everything the build reads, and callers must not
+    mutate the value.  A new gateway (a restarted JVM) starts from an
+    empty cache, so JVM objects of a shut-down gateway are never handed
+    to a live one."""
+    from pyspark import SparkContext
+
+    with _BUILT_LOCK:
+        gateway = SparkContext._gateway
+        if _BUILT_GATEWAY[0] is not gateway:
+            _BUILT.clear()
+            _BUILT_GATEWAY[0] = gateway
+        if key not in _BUILT:
+            _BUILT[key] = build()
+        return _BUILT[key]

@@ -13,9 +13,9 @@ adds the streaming pieces a production deployment bolts on:
     the streaming form would use applyInPandasWithState keyed by user).
   * ``incremental_linkage`` — foreachBatch micro-batch linkage: each
     new-document batch is normalized, blocked against the existing
-    record store, scored, and its matches merged into the cluster
-    table by incremental connected components (union new edges, re-run
-    CC over affected components only).
+    record store and scored; its matches are appended to the edge
+    store, and connected components re-runs over every stored edge to
+    rewrite the cluster table.
 """
 
 from __future__ import annotations
@@ -497,10 +497,13 @@ def incremental_linkage_batch(
     batch rebuild when it goes nonzero.
 
     Returns counters: docs in store, new docs, distinct stable
-    ``entities``, pairs scored this batch, ``candidate_key_rows`` (key rows entering the pair join —
-    the per-batch work bound: new keys + stored keys of touched
-    blocks, ~flat as the store grows), total edges, clusters, and the
-    drop-tier census (``dropped_blocks``, ``dropped_block_keys``).
+    ``entities``, pairs scored this batch, ``candidate_key_rows`` (key
+    rows entering the pair join — the per-batch work bound: new keys +
+    stored keys of touched blocks, ~flat as the store grows), total
+    edges, clusters, and the drop-tier census (``dropped_blocks``,
+    ``dropped_block_keys``).  The store-wide counters come from frames
+    the batch already pinned (one aggregate over the labelled
+    clusters), not from re-reading the store after the commit.
 
     At cluster scale the keys table would be written bucketed by
     block_key (sources/io.py write_bucketed pattern) so the
@@ -513,8 +516,8 @@ def incremental_linkage_batch(
     from ..operators.blocking import (
         block_keys,
         candidate_pairs,
-        name_expr,
         salted_candidate_pairs_cross,
+        sn_name_key,
         sorted_neighborhood_pairs,
     )
     from ..operators.cc import connected_components, stable_cluster_ids
@@ -537,27 +540,27 @@ def incremental_linkage_batch(
     clusters_path = os.path.join(store_dir, "clusters")
     ids_path = os.path.join(store_dir, "entity_ids")
 
-    new_records = records_view(
-        new_documents.dropDuplicates(["doc_id"]), cfg
-    ).localCheckpoint(eager=True)
-
     have_store = os.path.exists(records_path)
     tomb = _read_tombstones(spark, store_dir)
+    new_docs = new_documents.dropDuplicates(["doc_id"])
     if have_store:
         old_records_raw = spark.read.parquet(records_path)
         old_records = _anti_tombstones(old_records_raw, tomb, "doc_id")
         # idempotent replay: a doc already in the store is not "new";
         # a TOMBSTONED id is not re-ingested either (deletion is
-        # permanent by contract — see delete_documents)
-        new_records = new_records.join(
-            old_records_raw.select("doc_id"), "doc_id", "left_anti"
+        # permanent by contract — see delete_documents).  Filtered
+        # before normalizing, so the new records are pinned once.
+        new_docs = _anti_tombstones(
+            new_docs.join(
+                old_records_raw.select("doc_id"), "doc_id", "left_anti"
+            ),
+            tomb,
+            "doc_id",
         )
-        new_records = _anti_tombstones(
-            new_records, tomb, "doc_id"
-        ).localCheckpoint(eager=True)
-        all_records = old_records.unionByName(new_records)
-    else:
-        all_records = new_records
+    new_records = records_view(new_docs, cfg).localCheckpoint(eager=True)
+    all_records = (
+        old_records.unionByName(new_records) if have_store else new_records
+    )
 
     new_keys = block_keys(new_records, bc).localCheckpoint(eager=True)
 
@@ -634,9 +637,9 @@ def incremental_linkage_batch(
         )
     )
     if bc.sn_window > 0:
-        name = name_expr(all_records, bc)
+        name, has_name = sn_name_key(all_records, bc)
         sn = sorted_neighborhood_pairs(
-            all_records.where(name.isNotNull() & (name != "")),
+            all_records.where(has_name),
             name,
             window=bc.sn_window,
             materialize=True,
@@ -664,15 +667,13 @@ def incremental_linkage_batch(
     )
 
     wide = attach_pair_sides(pairs, all_records, SELF_COMPARE_FIELDS)
+    # pinned: counted here, filtered into the match edges below — an
+    # unpinned plan would run the whole scoring chain once per use
     scored = with_combined_score(
         score_pairs_self(wide, with_jw=cfg.with_jw), mode="self"
-    )
-    new_edges = (
-        rules.match(scored, "self")
-        .select("doc_id_1", "doc_id_2")
-        .localCheckpoint(eager=True)
-    )
+    ).localCheckpoint(eager=True)
     n_scored = scored.count()
+    new_edges = rules.match(scored, "self").select("doc_id_1", "doc_id_2")
 
     if have_store and os.path.exists(edges_path):
         edges = _anti_tombstones(
@@ -680,10 +681,13 @@ def incremental_linkage_batch(
         ).unionByName(new_edges)
     else:
         edges = new_edges
+    n_edges = edges.count()
 
+    # pinned: feeds the id carryover twice, the entity-id join and the
+    # clusters overwrite
     clusters = connected_components(
         edges, vertices=all_records.select("doc_id"), method=cfg.cc_method
-    )
+    ).localCheckpoint(eager=True)
 
     # persistent entity ids: CC labels are min-member doc_ids, so a
     # new member with a smaller id RELABELS its whole cluster —
@@ -704,26 +708,33 @@ def incremental_linkage_batch(
         mapping = stable_cluster_ids(
             prev_map, clusters, mint_prefix=f"e{cur_seq + 1}:"
         )
-        entity_ids = clusters.join(
+        labelled = clusters.join(
             mapping.select("cluster_id", "stable_id"), "cluster_id"
-        ).select("doc_id", "stable_id", F.lit(cur_seq + 1).alias("seq"))
+        )
     else:
         cur_seq = 0
-        entity_ids = clusters.select(
-            "doc_id",
-            F.col("cluster_id").alias("stable_id"),
-            F.lit(1).alias("seq"),
-        )
+        labelled = clusters.withColumn("stable_id", F.col("cluster_id"))
     # materialize before the commit: the append below writes into the
     # same path the prev mapping was read from
-    entity_ids = entity_ids.localCheckpoint(eager=True)
+    labelled = labelled.localCheckpoint(eager=True)
+    entity_ids = labelled.select(
+        "doc_id", "stable_id", F.lit(cur_seq + 1).alias("seq")
+    )
+    # store-wide counters from the pinned labelling (one row per live
+    # doc), not from a re-read of the store
+    totals = labelled.agg(
+        F.count("*").alias("docs"),
+        F.countDistinct("cluster_id").alias("clusters"),
+        F.countDistinct("stable_id").alias("entities"),
+    ).first()
 
     n_new = new_records.count()
-    n_dropped = dropped.count()
+    # the drop tier holds blocks past max_block_size * salt_drop_factor
+    # keys each, so it is a handful of rows: collect it whole
+    dropped_keys = [r[0] for r in dropped.select("block_key").collect()]
     if n_new > 0 or not have_store:
         # atomic batch commit: manifest(in-progress, pre-batch file
-        # sets) -> clusters overwrite (computed BEFORE the appends so
-        # its scan sees the old files) -> appends -> census overwrite
+        # sets) -> clusters overwrite -> appends -> census overwrite
         # -> manifest(complete).  recover_store rolls back anything
         # short of complete.
         _write_batch_manifest(
@@ -747,27 +758,17 @@ def incremental_linkage_batch(
             store_dir, {"status": "complete", "new_docs": n_new}
         )
     return {
-        "docs": _anti_tombstones(
-            spark.read.parquet(records_path), tomb, "doc_id"
-        ).count(),
+        "docs": totals["docs"],
         "new_docs": n_new,
         "pairs_scored": n_scored,
         "candidate_key_rows": n_key_rows,
-        "edges": _anti_tombstones(
-            spark.read.parquet(edges_path), tomb, "doc_id_1", "doc_id_2"
-        ).count(),
-        "clusters": spark.read.parquet(clusters_path)
-        .select("cluster_id")
-        .distinct()
-        .count(),
-        "entities": entity_ids.select("stable_id").distinct().count(),
-        "dropped_blocks": n_dropped,
+        "edges": n_edges,
+        "clusters": totals["clusters"],
+        "entities": totals["entities"],
+        "dropped_blocks": len(dropped_keys),
         # bounded sample of the dropped census (the count above is the
         # signal; the keys are for triage)
-        "dropped_block_keys": [
-            r["block_key"]
-            for r in dropped.select("block_key").limit(100).collect()
-        ],
+        "dropped_block_keys": dropped_keys[:100],
     }
 
 

@@ -154,3 +154,27 @@ def test_run_linkage_cross_mode(spark, tiny_gen, tmp_path):
         .count()
     )
     assert cross > 0
+
+
+def test_cli_configs_use_pipeline_blocking_defaults():
+    """Both CLIs build the pipeline's blocking defaults (windowed
+    sorted-neighborhood on, sn: prefix key off), not the bare
+    BlockingConfig defaults, and change only max_block_size."""
+    import argparse
+    import importlib.util
+    from dataclasses import replace
+
+    from record_linkage_ldu_spark.plans.linkage import LinkageConfig
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    args = argparse.Namespace(max_block_size=77, cc_method="auto", no_jw=False)
+    want = LinkageConfig().blocking
+    for tool in ("run_linkage", "run_incremental"):
+        spec = importlib.util.spec_from_file_location(
+            tool, os.path.join(repo, "tools", f"{tool}.py")
+        )
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        got = mod.linkage_config(args).blocking
+        assert got.max_block_size == 77, tool
+        assert replace(got, max_block_size=want.max_block_size) == want, tool

@@ -10,7 +10,8 @@ Asserts the plan properties the engine's scale story depends on:
   3. the linkage plan contains no CartesianProduct / BroadcastNestedLoop
      join anywhere (blocking must keep every join an equi-join);
   4. the record normalizers compile into WholeStageCodegen (no
-     Python eval in the normalize projection);
+     Python eval in the normalize projection), and the stopword filter
+     stays one InSet probe per stopword-filtered field;
   5. small-side joins (census caps, cluster mapping) broadcast.
 
 Usage: python tools/check_plans.py [sf_dir]   (default sf0.001)
@@ -121,6 +122,30 @@ def main(sf_dir: str) -> int:
             and "BatchEvalPython" not in narrow
             and "FileScan parquet" in narrow,
             narrow.strip().splitlines()[0][:100],
+        )
+        # the stopword filter keeps its runtime shape however the
+        # Column tree is built: one static InSet probe per
+        # stopword-filtered field (every normalizer but "number")
+        from record_linkage_ldu_spark.config import (
+            FIELD_NORMALIZER,
+            SPAN_FIELD_KINDS,
+        )
+
+        want = sum(
+            FIELD_NORMALIZER.get(k) not in (None, "number")
+            for k in SPAN_FIELD_KINDS
+        )
+        got = (
+            records_view(pdocs, cfg)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+            .count(" INSET ")
+        )
+        check(
+            "normalize holds one InSet per stopword-filtered field",
+            got == want,
+            f"{got} InSets, want {want}",
         )
     check(
         "no row-at-a-time Python eval in linkage plan",

@@ -44,6 +44,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def linkage_config(args):
+    """The pipeline's default configuration with this job's options."""
+    from dataclasses import replace
+
+    from record_linkage_ldu_spark.plans.linkage import (
+        LinkageConfig,
+        default_blocking,
+    )
+
+    return LinkageConfig(
+        blocking=replace(default_blocking(), max_block_size=args.max_block_size)
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument(
@@ -74,8 +88,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from record_linkage_ldu_spark.operators.blocking import BlockingConfig
-    from record_linkage_ldu_spark.plans.linkage import LinkageConfig
     from record_linkage_ldu_spark.session import build_session
     from record_linkage_ldu_spark.streaming.incremental import (
         incremental_linkage_batch,
@@ -88,9 +100,7 @@ def main(argv: list[str] | None = None) -> int:
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    cfg = LinkageConfig(
-        blocking=BlockingConfig(max_block_size=args.max_block_size)
-    )
+    cfg = linkage_config(args)
 
     # roll back any half-committed batch from a crashed prior run
     # BEFORE ingesting (stream mode does this inside each batch too;

@@ -36,6 +36,22 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def linkage_config(args):
+    """The pipeline's default configuration with this job's options."""
+    from dataclasses import replace
+
+    from record_linkage_ldu_spark.plans.linkage import (
+        LinkageConfig,
+        default_blocking,
+    )
+
+    return LinkageConfig(
+        blocking=replace(default_blocking(), max_block_size=args.max_block_size),
+        cc_method=args.cc_method,
+        with_jw=not args.no_jw,
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, help="documents table (parquet path or iceberg:<table>)")
@@ -64,11 +80,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from record_linkage_ldu_spark.operators.blocking import BlockingConfig
     from record_linkage_ldu_spark.operators.evaluate import validate_clusters
     from record_linkage_ldu_spark.plans.linkage import (
         CrossLinkagePipeline,
-        LinkageConfig,
         LinkagePipeline,
     )
     from record_linkage_ldu_spark.session import build_session
@@ -88,11 +102,7 @@ def main(argv: list[str] | None = None) -> int:
     documents = _read(args.input)
 
     store = StageStore(spark, args.checkpoint_dir or f"{args.output}/_stages")
-    cfg = LinkageConfig(
-        blocking=BlockingConfig(max_block_size=args.max_block_size),
-        cc_method=args.cc_method,
-        with_jw=not args.no_jw,
-    )
+    cfg = linkage_config(args)
     if args.input_right:
         res = CrossLinkagePipeline(spark, cfg, store=store).run(
             documents, _read(args.input_right)
