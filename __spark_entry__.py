@@ -66,7 +66,6 @@ from record_linkage_ldu_spark.operators.blocking import (
     sorted_neighborhood_pairs,
     stringmap_block_keys,
     suffix_block_keys,
-    sorted_neighborhood_pairs_cross,
     sql_canopy_assignments,
     sql_suffix_block_keys,
 )
@@ -232,9 +231,15 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memo(spark, sf_dir, "records", build)
 
 
-# pinned: the oracle SQL hardcodes substr(..,1,6) and no soundex —
-# keep in lockstep with _sql_keys_cte regardless of engine defaults
-_BLK = BlockingConfig(use_soundex=False, sn_prefix=6, max_block_size=MAX_BLOCK)
+# pinned: the oracle SQL hardcodes the sn: substr(..,1,6) key and no
+# soundex — keep in lockstep with _sql_keys_cte regardless of engine
+# defaults
+_BLK = BlockingConfig(
+    use_soundex=False,
+    use_sorted_neighborhood=True,
+    sn_prefix=6,
+    max_block_size=MAX_BLOCK,
+)
 
 
 def _capped_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,16 +843,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     # cross-dataset SN: a-copies vs b/c-copies, pairs oriented
     # (left, right) — the cross pipeline's name-typo recall tier
-    q["sorted_neighborhood_cross"] = lambda s, d: sorted_neighborhood_pairs_cross(
+    q["sorted_neighborhood_cross"] = lambda s, d: sorted_neighborhood_pairs(
         _records(s, d)
-        .where(F.col("doc_id").startswith("a"))
+        .where(F.col("doc_id").startswith("a") & (F.col("zip") != ""))
         .select("doc_id", "zip"),
-        _records(s, d)
-        .where(~F.col("doc_id").startswith("a"))
-        .select("doc_id", "zip"),
-        F.col("zip"),
         F.col("zip"),
         window=3,
+        records_right=_records(s, d)
+        .where(~F.col("doc_id").startswith("a") & (F.col("zip") != ""))
+        .select("doc_id", "zip"),
+        sort_key_right=F.col("zip"),
     )
 
     # ---------- dedup / text / fingerprint ----------

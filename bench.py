@@ -74,7 +74,7 @@ def skew_stress(spark) -> dict:
     - ``uniform_*``: N docs in size-8 blocks, plain pair gen — the
       no-skew control.
     - ``tiered_*``: same N docs but 10% of them in one MEGA key, run
-      through candidate_pairs_capped — the mega block crosses the drop
+      through tiered_pairs — the mega block crosses the drop
       ceiling, is censused and dropped (counts reported below), and the
       wall stays comparable to the control.  Untiered, the same input
       is quadratic: the mega block alone implies (N/10 choose 2) pairs.
@@ -94,8 +94,8 @@ def skew_stress(spark) -> dict:
     from record_linkage_ldu_spark.operators.blocking import (
         BlockingConfig,
         candidate_pairs,
-        candidate_pairs_capped,
         salted_candidate_pairs,
+        tiered_pairs,
     )
 
     out: dict = {}
@@ -138,8 +138,8 @@ def skew_stress(spark) -> dict:
         out["uniform_wall_s"] = round(time.time() - t0, 3)
 
         t0 = time.time()
-        pairs, dropped = candidate_pairs_capped(keys(N, 0.1), cfg)
-        out["tiered_pairs"] = pairs.count()
+        pairs, dropped = tiered_pairs(keys(N, 0.1), cfg)
+        out["tiered_pairs"] = pairs.dropDuplicates(["doc_id_1", "doc_id_2"]).count()
         out["tiered_wall_s"] = round(time.time() - t0, 3)
         out["dropped_blocks"] = [
             {"block_key": r["block_key"], "block_size": r["block_size"]}

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .blocking import candidate_pairs
 from .dedup import ensure_width
 
 
@@ -266,19 +267,7 @@ def _sign_bucket_candidates(
     else:
         keys = base.select("doc_id", F.col("bucket").alias("block_key"))
     if max_bucket_size is None:
-        a = keys.alias("a")
-        b = keys.alias("b")
-        pairs = (
-            a.join(b, "block_key")
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id_1"),
-                F.col("b.doc_id").alias("doc_id_2"),
-            )
-        )
-        if multiprobe:
-            pairs = pairs.dropDuplicates(["doc_id_1", "doc_id_2"])
-        return pairs, None
+        return candidate_pairs(keys, dedup=multiprobe), None
     # single probe = one key per doc = a pair lives in exactly one
     # bucket/tier: skip the pair-dedup shuffle (unique_key)
     pairs, dropped = capped_bucket_pairs(

@@ -64,12 +64,13 @@ class BlockingConfig:
     use_nickname_soundex: bool = False
     # sn: PREFIX-EQUALITY key (cheap, but a single long common token
     # degenerates it into a mega-block — measured 30M junk pairs from
-    # 9 blocks at 198k docs).  The windowed pass below is the scalable
-    # form; the prefix key remains for small corpora / oracle parity.
-    use_sorted_neighborhood: bool = True
+    # 9 blocks at 198k docs).  Off by default: the windowed pass below
+    # is the scalable form; the prefix key remains for small corpora /
+    # oracle parity.
+    use_sorted_neighborhood: bool = False
     # windowed sorted-neighborhood pass over the sorted name: pair
     # volume bounded at n*(sn_window-1) regardless of skew.  0 = off.
-    sn_window: int = 0
+    sn_window: int = 8
     contact_fields: tuple[str, ...] = ("phone", "email", "zip")
     name_field: str = "name"
     fallback_name_fields: tuple[str, ...] = ("company_name",)
@@ -95,7 +96,7 @@ def _name_fields(columns: list[str], cfg: BlockingConfig) -> tuple[str, ...]:
 
 def _name_col(fields: tuple[str, ...]) -> Column:
     return built_once(
-        ("name_expr", fields),
+        ("blocking_name", fields),
         lambda: (
             F.coalesce(*[F.col(c) for c in fields])
             if len(fields) > 1
@@ -104,16 +105,11 @@ def _name_col(fields: tuple[str, ...]) -> Column:
     )
 
 
-def name_expr(records: DataFrame, cfg: BlockingConfig) -> Column:
-    """The blocking name: the configured name field coalesced with its
-    fallbacks (company_name by default) — shared by the key families
-    and both sorted-neighborhood passes."""
-    return _name_col(_name_fields(records.columns, cfg))
-
-
 def sn_name_key(records: DataFrame, cfg: BlockingConfig) -> tuple[Column, Column]:
-    """The sorted-neighborhood sort key (the blocking name) and the
-    predicate that keeps the records having one."""
+    """The sorted-neighborhood sort key — the blocking name: the
+    configured name field coalesced with its fallbacks (company_name
+    by default), as the key families read it — and the predicate that
+    keeps the records having one."""
     fields = _name_fields(records.columns, cfg)
     name = _name_col(fields)
     return name, built_once(
@@ -252,52 +248,100 @@ def block_census(keys: DataFrame) -> DataFrame:
     return keys.groupBy("block_key").agg(F.count("*").alias("block_size"))
 
 
+def _tier_filters(
+    census: DataFrame, cfg: BlockingConfig
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The census thresholds: (over-cap block keys, hot block keys,
+    dropped census).  Hot blocks are those in (max_block_size,
+    max_block_size * salt_drop_factor]; the dropped census holds the
+    blocks above that ceiling.  Both key sets are broadcast — the
+    census has one row per distinct block key."""
+    size = F.col("block_size")
+    ceiling = cfg.max_block_size * cfg.salt_drop_factor
+    over_cap = census.where(size > cfg.max_block_size)
+    hot = over_cap.where(size <= ceiling)
+    return (
+        F.broadcast(over_cap.select("block_key")),
+        F.broadcast(hot.select("block_key")),
+        census.where(size > ceiling),
+    )
+
+
 def cap_blocks(
-    keys: DataFrame,
-    cfg: BlockingConfig = BlockingConfig(),
-    census: DataFrame | None = None,
+    keys: DataFrame, cfg: BlockingConfig = BlockingConfig()
 ) -> tuple[DataFrame, DataFrame]:
     """Split the key table into (kept, dropped_census).
 
     ``kept`` holds blocks up to the plain-join cap; blocks above the
     salted ceiling (``max_block_size * salt_drop_factor``) land in
     ``dropped_census``.  Hot blocks between the two are NOT in either
-    output — route them through ``salted_candidate_pairs`` (or use
-    ``candidate_pairs_capped`` which composes all three tiers).
-    Pass a precomputed (ideally pinned) ``census`` to share one
-    aggregate across the tier filters.
+    output — ``tiered_pairs`` composes all three tiers.
     """
-    if census is None:
-        census = block_census(keys)
-    big = census.where(F.col("block_size") > cfg.max_block_size)
-    kept = keys.join(F.broadcast(big.select("block_key")), "block_key", "left_anti")
-    dropped = census.where(
-        F.col("block_size") > cfg.max_block_size * cfg.salt_drop_factor
-    )
-    return kept, dropped
+    over_cap, _, dropped = _tier_filters(block_census(keys), cfg)
+    return keys.join(over_cap, "block_key", "left_anti"), dropped
 
 
-def hot_blocks(
+def tiered_pairs(
     keys: DataFrame,
-    cfg: BlockingConfig = BlockingConfig(),
+    cfg: BlockingConfig,
+    keys_right: DataFrame | None = None,
     census: DataFrame | None = None,
-) -> DataFrame:
-    """Keys of the salt tier: block size in
-    (max_block_size, max_block_size * salt_drop_factor]."""
+    broadcast_left: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """Three-tier candidate generation over (doc_id, block_key) tables:
+    plain equi-join for blocks up to ``cfg.max_block_size``, salted
+    join for hot blocks up to ``salt_drop_factor`` times that, drop +
+    census beyond the ceiling.  Returns (raw_pairs, dropped_census).
+
+    Self mode (``keys_right=None``) pairs within one table
+    (``doc_id_1 < doc_id_2``) through the plain self-join and the
+    triangle-salted join.  Two-sided mode pairs (left, right) through
+    the plain equi-join and the replicate-left salted join; a block's
+    width there is |left| x |right|, so the default census counts
+    both tables.  Pass a precomputed (ideally pinned) ``census`` to
+    share one aggregate — the incremental store passes its merged
+    census.
+
+    The pairs are NOT deduplicated: a pair reached through several
+    keys (or through one key per tier) appears once per key, and the
+    caller runs the one pair-dedup shuffle over everything it unions.
+
+    ``broadcast_left`` hints the two-sided left tables as broadcast
+    (a small new-keys side against a large stored side).  The hint is
+    applied after the tier filter: Spark drops a hint that sits under
+    a join."""
     if census is None:
-        census = block_census(keys)
-    hot = census.where(
-        (F.col("block_size") > cfg.max_block_size)
-        & (F.col("block_size") <= cfg.max_block_size * cfg.salt_drop_factor)
+        census = block_census(
+            keys if keys_right is None else keys.unionByName(keys_right)
+        )
+    over_cap, hot, dropped = _tier_filters(census, cfg)
+
+    def split(k: DataFrame) -> tuple[DataFrame, DataFrame]:
+        return (
+            k.join(over_cap, "block_key", "left_anti"),
+            k.join(hot, "block_key"),
+        )
+
+    kept_l, hot_l = split(keys)
+    if keys_right is None:
+        plain = candidate_pairs(kept_l, dedup=False)
+        salted = salted_candidate_pairs(
+            hot_l, salt=cfg.salt_buckets, dedup=False
+        )
+        return plain.unionByName(salted), dropped
+    kept_r, hot_r = split(keys_right)
+    if broadcast_left:
+        kept_l, hot_l = F.broadcast(kept_l), F.broadcast(hot_l)
+    plain = candidate_pairs(kept_l, kept_r, dedup=False)
+    salted = salted_candidate_pairs_cross(
+        hot_l, hot_r, salt=cfg.salt_buckets, dedup=False
     )
-    return keys.join(F.broadcast(hot.select("block_key")), "block_key")
+    return plain.unionByName(salted), dropped
 
 
 def salted_candidate_pairs(
     hot_keys: DataFrame,
     salt: int = 8,
-    left_alias: str = "doc_id_1",
-    right_alias: str = "doc_id_2",
     dedup: bool = True,
 ) -> DataFrame:
     """Self-join pair generation for HOT blocks via the triangle-cell
@@ -372,22 +416,18 @@ def salted_candidate_pairs(
         a.join(c, "cell_key")
         .where(pair_cond)
         .select(
-            F.least(F.col("a.doc_id"), F.col("c.doc_id")).alias(left_alias),
-            F.greatest(F.col("a.doc_id"), F.col("c.doc_id")).alias(right_alias),
+            F.least(F.col("a.doc_id"), F.col("c.doc_id")).alias("doc_id_1"),
+            F.greatest(F.col("a.doc_id"), F.col("c.doc_id")).alias("doc_id_2"),
         )
-        .where(F.col(left_alias) != F.col(right_alias))
+        .where(F.col("doc_id_1") != F.col("doc_id_2"))
     )
-    if dedup:
-        out = out.dropDuplicates([left_alias, right_alias])
-    return out
+    return out.dropDuplicates(["doc_id_1", "doc_id_2"]) if dedup else out
 
 
 def salted_candidate_pairs_cross(
     hot_keys_left: DataFrame,
     hot_keys_right: DataFrame,
     salt: int = 8,
-    left_alias: str = "doc_id_1",
-    right_alias: str = "doc_id_2",
     dedup: bool = True,
 ) -> DataFrame:
     """Cross-dataset pair generation for HOT blocks via the classic
@@ -403,34 +443,41 @@ def salted_candidate_pairs_cross(
     the left side only — put the smaller table on the left.
     """
     right = hot_keys_right.select(
-        F.col("doc_id").alias(right_alias),
+        F.col("doc_id").alias("doc_id_2"),
         "block_key",
         F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt))
         .cast("int")
         .alias("_b"),
     )
     left = hot_keys_left.select(
-        F.col("doc_id").alias(left_alias),
+        F.col("doc_id").alias("doc_id_1"),
         "block_key",
         F.explode(F.array(*[F.lit(i) for i in range(salt)])).alias("_b"),
     )
-    out = left.join(right, ["block_key", "_b"]).select(left_alias, right_alias)
-    return out.dropDuplicates([left_alias, right_alias]) if dedup else out
+    out = left.join(right, ["block_key", "_b"]).select("doc_id_1", "doc_id_2")
+    return out.dropDuplicates(["doc_id_1", "doc_id_2"]) if dedup else out
 
 
 def generate_candidates(
     records: DataFrame,
     cfg: BlockingConfig = BlockingConfig(),
+    records_right: DataFrame | None = None,
     num_partitions: int | None = None,
     materialize_keys: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full candidate generation for a record table: three-tier
-    equality-key pairs (plain / salted / dropped) plus, when
+    """Full candidate generation: three-tier equality-key pairs
+    (``tiered_pairs``: plain / salted / dropped) plus, when
     ``cfg.sn_window > 0``, the windowed sorted-neighborhood pass over
     the name field.  One pair-dedup shuffle over the union.  Returns
-    (pairs, dropped_census).  ``records`` must carry one row per
+    (pairs, dropped_census).  Each record table must carry one row per
     doc_id (see block_keys' precondition — tier assignment depends on
     exact census counts).
+
+    Self mode (``records_right=None``) yields pairs with ``doc_id_1 <
+    doc_id_2``.  Two-sided mode (cross linkage) yields (left, right)
+    pairs: the census counts both key tables, and the SN pass ranks
+    both sides together and keeps cross-side pairs.  doc_ids must be
+    unique across the two tables.
 
     ``num_partitions`` makes the dedup shuffle double as the output
     repartition: the raw pair union is hash-partitioned by
@@ -442,7 +489,7 @@ def generate_candidates(
     cost ~100us of similarity kernels each, so byte-based sizing
     under-splits).
 
-    ``materialize_keys=True`` pins the exploded key table and its
+    ``materialize_keys=True`` pins the exploded key table(s) and the
     census with EAGER localCheckpoints before fanning out: the
     keys/census subplan is referenced by the plain tier, the salt
     tier, and three census reads, and exchange reuse does not reliably
@@ -461,41 +508,48 @@ def generate_candidates(
     that caps its 8->32 scaling; overlapped, the idle cores of one
     chain's barrier absorb the other chain's work (Spark schedules
     concurrent jobs from separate threads)."""
+    if records_right is not None and cfg.use_qgram_name:
+        raise ValueError(
+            "blocking.use_qgram_name is self-linkage only: q-gram keys "
+            "are df-pruned within one record table, so there is no "
+            "two-sided form. Turn it off for cross linkage."
+        )
+    sides = [records] if records_right is None else [records, records_right]
 
     def _build_key_tiers():
-        keys = block_keys(records, cfg)
+        keys = [block_keys(r, cfg) for r in sides]
         census = None
         if materialize_keys:
-            keys = keys.localCheckpoint(eager=True)
-            # the census feeds the kept/dropped/hot tier filters
-            # (three aggregate subplans exchange reuse does not
-            # reliably collapse); it is tiny (one row per distinct
-            # block key) — pin it once alongside the keys.
-            census = block_census(keys).localCheckpoint(eager=True)
-        kept, dropped = cap_blocks(keys, cfg, census=census)
-        pairs = candidate_pairs(kept, dedup=False)
-        hot = hot_blocks(keys, cfg, census=census)
-        return (
-            pairs.unionByName(
-                salted_candidate_pairs(
-                    hot, salt=cfg.salt_buckets, dedup=False
-                )
-            ),
-            dropped,
-        )
+            keys = [k.localCheckpoint(eager=True) for k in keys]
+            # the census feeds the over-cap/hot/dropped tier filters
+            # (aggregate subplans exchange reuse does not reliably
+            # collapse); it is tiny (one row per distinct block key)
+            # — pin it once alongside the keys.
+            union = keys[0] if len(keys) == 1 else keys[0].unionByName(keys[1])
+            census = block_census(union).localCheckpoint(eager=True)
+        keys_right = keys[1] if len(keys) > 1 else None
+        return tiered_pairs(keys[0], cfg, keys_right, census=census)
+
+    def _sn_side(r: DataFrame) -> tuple[DataFrame, Column]:
+        name, has_name = sn_name_key(r, cfg)
+        return r.where(has_name), name
 
     def _build_sn():
-        name, has_name = sn_name_key(records, cfg)
+        left, key = _sn_side(records)
+        if records_right is not None:
+            right, key_right = _sn_side(records_right)
+            return sorted_neighborhood_pairs(
+                left, key, cfg.sn_window, right, key_right,
+                materialize=materialize_keys,
+            )
         sn = sorted_neighborhood_pairs(
-            records.where(has_name),
-            name,
-            window=cfg.sn_window,
-            materialize=materialize_keys,
+            left, key, cfg.sn_window, materialize=materialize_keys
         )
-        # SN emits pairs in RANK order; canonicalize to doc_id order
-        # so the final dedup collapses them with the equality-key
-        # pairs (an uncanonicalized reversed pair would be scored
-        # twice and evade downstream doc_id_1<doc_id_2 conventions).
+        # self SN emits pairs in RANK order; canonicalize to doc_id
+        # order so the final dedup collapses them with the
+        # equality-key pairs (an uncanonicalized reversed pair would
+        # be scored twice and evade downstream doc_id_1<doc_id_2
+        # conventions).
         return sn.select(
             F.least("doc_id_1", "doc_id_2").alias("doc_id_1"),
             F.greatest("doc_id_1", "doc_id_2").alias("doc_id_2"),
@@ -530,46 +584,12 @@ def generate_candidates(
     return pairs.dropDuplicates(["doc_id_1", "doc_id_2"]), dropped
 
 
-def candidate_pairs_capped(
-    keys: DataFrame,
-    cfg: BlockingConfig = BlockingConfig(),
-    pair_dedup: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Three-tier candidate generation: plain equi-join for normal
-    blocks, triangle-salted join for hot blocks, drop + census beyond
-    the ceiling.  Returns (pairs, dropped_census).
-
-    One pair-dedup shuffle total: the per-tier joins run raw
-    (``dedup=False``) and a single ``dropDuplicates`` covers both
-    multi-key duplicates and cross-tier duplicates (a pair can reach
-    one key in the plain tier and another in the salt tier).  The
-    three census references compile to the same aggregate subplan, so
-    Spark's exchange reuse evaluates it once.
-
-    ``pair_dedup=False`` skips that shuffle — ONLY valid when every
-    doc emits exactly one key (single-bucket families, e.g.
-    single-probe sign-LSH): a pair then lives in exactly one block and
-    one tier, so no duplicates can arise and the dedup would shuffle
-    the full pair set for zero removed rows.
-    """
-    kept, dropped = cap_blocks(keys, cfg)
-    pairs = candidate_pairs(kept, dedup=False)
-    hot = hot_blocks(keys, cfg)
-    salted = salted_candidate_pairs(hot, salt=cfg.salt_buckets, dedup=False)
-    out = pairs.unionByName(salted)
-    if pair_dedup:
-        out = out.dropDuplicates(["doc_id_1", "doc_id_2"])
-    return out, dropped
-
-
 def candidate_pairs(
     keys_left: DataFrame,
     keys_right: DataFrame | None = None,
-    left_alias: str = "doc_id_1",
-    right_alias: str = "doc_id_2",
     dedup: bool = True,
 ) -> DataFrame:
-    """Within-block pairs.
+    """Within-block pairs (doc_id_1, doc_id_2).
 
     Self mode (keys_right=None): unordered pairs, ``doc_id_1 <
     doc_id_2`` (compare_ldu_ldu.py:112-114 semantics, minus the
@@ -584,20 +604,17 @@ def candidate_pairs(
             a.join(b, "block_key")
             .where(F.col("a.doc_id") < F.col("b.doc_id"))
             .select(
-                F.col("a.doc_id").alias(left_alias),
-                F.col("b.doc_id").alias(right_alias),
+                F.col("a.doc_id").alias("doc_id_1"),
+                F.col("b.doc_id").alias("doc_id_2"),
             )
         )
     else:
         pairs = (
-            keys_left.withColumnRenamed("doc_id", left_alias)
-            .join(
-                keys_right.withColumnRenamed("doc_id", right_alias),
-                "block_key",
-            )
-            .select(left_alias, right_alias)
+            keys_left.withColumnRenamed("doc_id", "doc_id_1")
+            .join(keys_right.withColumnRenamed("doc_id", "doc_id_2"), "block_key")
+            .select("doc_id_1", "doc_id_2")
         )
-    return pairs.dropDuplicates([left_alias, right_alias]) if dedup else pairs
+    return pairs.dropDuplicates(["doc_id_1", "doc_id_2"]) if dedup else pairs
 
 
 def refined_block_keys(
@@ -637,8 +654,8 @@ def refined_block_keys(
         the cap at the deepest level (identical twins of a degenerate
         record, e.g. one shared placeholder value in EVERY component).
         Route them to the salt tier (``salted_candidate_pairs``) or
-        drop-with-report, exactly like candidate_pairs_capped's third
-        tier — refinement shrinks that tier, it does not replace the
+        drop-with-report, exactly like tiered_pairs' third tier
+        — refinement shrinks that tier, it does not replace the
         reporting contract.
 
     Scale shape: level i is ONE census groupBy on the level-i key plus
@@ -822,6 +839,8 @@ def sorted_neighborhood_pairs(
     records: DataFrame,
     sort_key,
     window: int = 5,
+    records_right: DataFrame | None = None,
+    sort_key_right=None,
     id_col: str = "doc_id",
     num_partitions: int | None = None,
     materialize: bool = False,
@@ -837,12 +856,36 @@ def sorted_neighborhood_pairs(
     neighborhood join is a bucketed equi-join (bucket = rank div
     window; each record also joins its predecessor bucket) + a
     rank-distance filter — no cartesian, no driver-side pair state.
+    Self-mode pairs come out in rank order (doc_id_1 ranks first).
+
+    Two-sided mode (``records_right`` with ``sort_key_right``) ranks
+    the UNION of both sides, each row tagged with its side, and keeps
+    only cross-side pairs within the window, oriented (left doc_id_1,
+    right doc_id_2) — the cross-linkage recall tier for a name typo
+    that flips every equality key.  doc_ids must be unique across the
+    two inputs.  Callers drop rows without a sort key beforehand.
+
     ``materialize`` pins the rank table (read by BOTH join sides) —
     pass True in eager pipeline builds, False for lazy/oracle frames.
     """
-    ranked = global_ranks(
-        records, sort_key, id_col, num_partitions, materialize=materialize
-    )
+    if records_right is None:
+        carry: tuple[str, ...] = ()
+        ranked = global_ranks(
+            records, sort_key, id_col, num_partitions, materialize=materialize
+        )
+    else:
+        carry = ("_side",)
+        union = records.select(
+            F.col(id_col), sort_key.alias("_k"), F.lit(0).alias("_side")
+        ).unionByName(
+            records_right.select(
+                F.col(id_col), sort_key_right.alias("_k"), F.lit(1).alias("_side")
+            )
+        )
+        ranked = global_ranks(
+            union, F.col("_k"), id_col, num_partitions, carry_cols=carry,
+            materialize=materialize,
+        )
     # One-sided bucketing makes every qualifying pair meet in EXACTLY
     # one bucket, so no dedup shuffle is needed: for a pair with ranks
     # ra < rb and rb - ra < window, the higher side's primary bucket
@@ -855,89 +898,29 @@ def sorted_neighborhood_pairs(
     lo = ranked.select(
         F.col(id_col).alias("doc_id_1"),
         F.col("_rank").alias("_rank_lo"),
+        *[F.col(c).alias(c + "_lo") for c in carry],
         F.explode(F.array(div, div + 1)).alias("_bucket"),
     )
     hi = ranked.select(
         F.col(id_col).alias("doc_id_2"),
         F.col("_rank").alias("_rank_hi"),
+        *[F.col(c).alias(c + "_hi") for c in carry],
         div.alias("_bucket"),
     )
-    return (
-        lo.join(hi, "_bucket")
-        .where(
-            (F.col("_rank_hi") > F.col("_rank_lo"))
-            & (F.col("_rank_hi") - F.col("_rank_lo") < window)
-        )
-        .select("doc_id_1", "doc_id_2")
+    pairs = lo.join(hi, "_bucket").where(
+        (F.col("_rank_hi") > F.col("_rank_lo"))
+        & (F.col("_rank_hi") - F.col("_rank_lo") < window)
     )
-
-
-def sorted_neighborhood_pairs_cross(
-    records_left: DataFrame,
-    records_right: DataFrame,
-    sort_key_left,
-    sort_key_right,
-    window: int = 5,
-    id_col: str = "doc_id",
-    num_partitions: int | None = None,
-    materialize: bool = False,
-) -> DataFrame:
-    """Cross-dataset sorted neighborhood: rank the UNION of both
-    sides by the sort key and keep only cross-side pairs within the
-    window, oriented (left doc_id_1, right doc_id_2).
-
-    This is the cross-mode recall twin of the self pipeline's windowed
-    SN pass — without it, cross candidates come only from soundex +
-    contact keys and a name typo that flips the soundex code loses the
-    pair entirely.  Same scale bound: pair volume <= n*(window-1)
-    regardless of name-value skew (worst case all window-mates are
-    cross-side).  The side tag rides through ``global_ranks`` — no
-    post-hoc side join.  doc_ids must be globally unique across the
-    two inputs (the cross pipeline's standing requirement).
-    """
-    left = records_left.select(
-        F.col(id_col), sort_key_left.alias("_k"), F.lit(0).alias("_side")
-    )
-    right = records_right.select(
-        F.col(id_col), sort_key_right.alias("_k"), F.lit(1).alias("_side")
-    )
-    union = left.unionByName(right).where(
-        F.col("_k").isNotNull() & (F.col("_k") != "")
-    )
-    ranked = global_ranks(
-        union, F.col("_k"), id_col, num_partitions, carry_cols=("_side",),
-        materialize=materialize,
-    )
-    # same one-sided bucketing as the self pass: each qualifying pair
-    # meets in exactly one bucket, no dedup shuffle needed.
-    div = (F.col("_rank") / window).cast("long")
-    lo = ranked.select(
-        F.col(id_col).alias("_id_lo"),
-        F.col("_side").alias("_side_lo"),
-        F.col("_rank").alias("_rank_lo"),
-        F.explode(F.array(div, div + 1)).alias("_bucket"),
-    )
-    hi = ranked.select(
-        F.col(id_col).alias("_id_hi"),
-        F.col("_side").alias("_side_hi"),
-        F.col("_rank").alias("_rank_hi"),
-        div.alias("_bucket"),
-    )
-    return (
-        lo.join(hi, "_bucket")
-        .where(
-            (F.col("_rank_hi") > F.col("_rank_lo"))
-            & (F.col("_rank_hi") - F.col("_rank_lo") < window)
-            & (F.col("_side_lo") != F.col("_side_hi"))
-        )
-        .select(
-            F.when(F.col("_side_lo") == 0, F.col("_id_lo"))
-            .otherwise(F.col("_id_hi"))
-            .alias("doc_id_1"),
-            F.when(F.col("_side_lo") == 0, F.col("_id_hi"))
-            .otherwise(F.col("_id_lo"))
-            .alias("doc_id_2"),
-        )
+    if records_right is None:
+        return pairs.select("doc_id_1", "doc_id_2")
+    lo_is_left = F.col("_side_lo") == 0
+    return pairs.where(F.col("_side_lo") != F.col("_side_hi")).select(
+        F.when(lo_is_left, F.col("doc_id_1"))
+        .otherwise(F.col("doc_id_2"))
+        .alias("doc_id_1"),
+        F.when(lo_is_left, F.col("doc_id_2"))
+        .otherwise(F.col("doc_id_1"))
+        .alias("doc_id_2"),
     )
 
 

@@ -31,7 +31,7 @@ from ..functions.text import (
     sql_winnow_fingerprint_cte,
     tokens,
 )
-from .blocking import BlockingConfig, candidate_pairs_capped
+from .blocking import BlockingConfig, block_census, candidate_pairs, tiered_pairs
 
 
 def capped_bucket_pairs(
@@ -43,7 +43,7 @@ def capped_bucket_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """Three-tier candidate generation over a generic ``(doc_id,
     block_key)`` bucket table — the linkage blocking layer's
-    census/cap/salt scheme (blocking.py:144-291) applied to dedup
+    census/cap/salt scheme (``blocking.tiered_pairs``) applied to dedup
     buckets (MinHash bands, SimHash bands, metadata blocks).
 
     Why: a single boilerplate bucket (templated/empty docs sharing one
@@ -66,7 +66,10 @@ def capped_bucket_pairs(
         salt_buckets=salt_buckets,
         salt_drop_factor=drop_factor,
     )
-    return candidate_pairs_capped(keys, cfg, pair_dedup=not unique_key)
+    pairs, dropped = tiered_pairs(keys, cfg)
+    if not unique_key:
+        pairs = pairs.dropDuplicates(["doc_id_1", "doc_id_2"])
+    return pairs, dropped
 
 
 def _pin(df: DataFrame, enabled: bool) -> DataFrame:
@@ -345,17 +348,7 @@ def minhash_near_duplicates(
         pin,
     )
     if max_bucket_size is None:
-        a = keys.alias("a")
-        b = keys.alias("b")
-        cand = (
-            a.join(b, "block_key")
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id_1"),
-                F.col("b.doc_id").alias("doc_id_2"),
-            )
-            .dropDuplicates(["doc_id_1", "doc_id_2"])
-        )
+        cand = candidate_pairs(keys)
         dropped = df.sparkSession.createDataFrame(
             [], "block_key string, block_size long"
         )
@@ -490,41 +483,16 @@ def capped_bucket_pairs_cross(
     census.  One pair-dedup shuffle covers multi-key and cross-tier
     duplicates.  Returns (pairs(doc_id_1=left, doc_id_2=right),
     dropped_census)."""
-    from .blocking import block_census, salted_candidate_pairs_cross
-
-    census = _pin(
-        block_census(keys_left.unionByName(keys_right)), True
+    cfg = BlockingConfig(
+        max_block_size=max_bucket_size,
+        salt_buckets=salt_buckets,
+        salt_drop_factor=drop_factor,
     )
-    big = census.where(F.col("block_size") > max_bucket_size)
-    hot = census.where(
-        (F.col("block_size") > max_bucket_size)
-        & (F.col("block_size") <= max_bucket_size * drop_factor)
+    census = _pin(block_census(keys_left.unionByName(keys_right)), True)
+    pairs, dropped = tiered_pairs(
+        keys_left, cfg, keys_right=keys_right, census=census
     )
-    dropped = census.where(
-        F.col("block_size") > max_bucket_size * drop_factor
-    )
-    kept_l = keys_left.join(
-        F.broadcast(big.select("block_key")), "block_key", "left_anti"
-    )
-    kept_r = keys_right.join(
-        F.broadcast(big.select("block_key")), "block_key", "left_anti"
-    )
-    plain = (
-        kept_l.withColumnRenamed("doc_id", "doc_id_1")
-        .join(
-            kept_r.withColumnRenamed("doc_id", "doc_id_2"), "block_key"
-        )
-        .select("doc_id_1", "doc_id_2")
-    )
-    hot_l = keys_left.join(F.broadcast(hot.select("block_key")), "block_key")
-    hot_r = keys_right.join(F.broadcast(hot.select("block_key")), "block_key")
-    salted = salted_candidate_pairs_cross(
-        hot_l, hot_r, salt=salt_buckets, dedup=False
-    )
-    return (
-        plain.unionByName(salted).dropDuplicates(["doc_id_1", "doc_id_2"]),
-        dropped.select("block_key", "block_size"),
-    )
+    return pairs.dropDuplicates(["doc_id_1", "doc_id_2"]), dropped
 
 
 def minhash_cross_near_duplicates(
@@ -1480,34 +1448,12 @@ def winnow_near_duplicates(
         salt_drop_factor=drop_factor,
     )
     if max_bucket_size is None:
-        a = keys.alias("a")
-        b = keys.alias("b")
-        raw = (
-            a.join(b, "block_key")
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id_1"),
-                F.col("b.doc_id").alias("doc_id_2"),
-            )
-        )
+        raw = candidate_pairs(keys, dedup=False)
         dropped = df.sparkSession.createDataFrame(
             [], "block_key string, block_size long"
         )
     else:
-        from .blocking import (
-            candidate_pairs,
-            cap_blocks,
-            hot_blocks,
-            salted_candidate_pairs,
-        )
-
-        kept, dropped = cap_blocks(keys, cfg)
-        plain = candidate_pairs(kept, dedup=False)
-        hot = hot_blocks(keys, cfg)
-        salted = salted_candidate_pairs(
-            hot, salt=cfg.salt_buckets, dedup=False
-        )
-        raw = plain.unionByName(salted)
+        raw, dropped = tiered_pairs(keys, cfg)
     out = (
         raw.groupBy("doc_id_1", "doc_id_2")
         .agg(F.count("*").alias("shared_fps"))
@@ -1660,17 +1606,7 @@ def simhash_near_duplicates(
     )
     keys = sk.select("doc_id", F.explode(band_keys).alias("block_key"))
     if max_bucket_size is None:
-        a = keys.alias("a")
-        b = keys.alias("b")
-        cand = (
-            a.join(b, "block_key")
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id_1"),
-                F.col("b.doc_id").alias("doc_id_2"),
-            )
-            .dropDuplicates(["doc_id_1", "doc_id_2"])
-        )
+        cand = candidate_pairs(keys)
         dropped = sketches.sparkSession.createDataFrame(
             [], "block_key string, block_size long"
         )

@@ -25,16 +25,6 @@ from pyspark.sql import functions as F
 from ..config import SELF_COMPARE_FIELDS, SPAN_FIELD_KINDS
 from ..operators import rules
 from ..operators.blocking import BlockingConfig, generate_candidates
-
-
-def default_blocking() -> BlockingConfig:
-    """Pipeline default: composite soundex + exact contact keys with
-    salted hot blocks, plus the WINDOWED sorted-neighborhood pass.
-    The sn: prefix-equality key is off — a single long common name
-    token turns it into a mega-block (measured 30M junk pairs from 9
-    blocks at 198k docs) while the windowed pass caps the same recall
-    at n*(window-1) pairs."""
-    return BlockingConfig(use_sorted_neighborhood=False, sn_window=8)
 from ..operators.cc import connected_components
 from ..operators.scoring import (
     attach_pair_sides,
@@ -48,7 +38,7 @@ from ..sources.io import StageStore, input_fingerprint
 
 @dataclass
 class LinkageConfig:
-    blocking: BlockingConfig = field(default_factory=default_blocking)
+    blocking: BlockingConfig = field(default_factory=BlockingConfig)
     cc_method: str = "auto"
     with_jw: bool = True
     # with no StageStore, pin the two reuse points (records feeds the
@@ -110,10 +100,13 @@ _FAMILIES = {
 }
 
 
-def records_view(documents: DataFrame, cfg: LinkageConfig | None = None) -> DataFrame:
-    """documents(doc_id, spans) -> normalized canonical record columns.
-    One narrow projection chain end-to-end (scan -> project)."""
-    cfg = cfg or LinkageConfig()
+def normalized_fields(documents: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    """documents(doc_id, spans) -> doc_id, spans, source and one
+    normalized column per span kind: extract, then the optional
+    accent fold, then the normalizer chains.  Every pipeline's records
+    go through this one prefix, so ``fold_accents`` and
+    ``unicode_names`` hold for self, cross and incremental linkage
+    alike."""
     wide = extract_fields(documents)
     if cfg.fold_accents:
         from ..functions.normalizers import fold_accents as _fold
@@ -124,7 +117,14 @@ def records_view(documents: DataFrame, cfg: LinkageConfig | None = None) -> Data
                 lambda: {k: _fold(F.col(k)) for k in SPAN_FIELD_KINDS},
             )
         )
-    wide = normalize_fields(wide, unicode_names=cfg.unicode_names)
+    return normalize_fields(wide, unicode_names=cfg.unicode_names)
+
+
+def records_view(documents: DataFrame, cfg: LinkageConfig | None = None) -> DataFrame:
+    """documents(doc_id, spans) -> normalized canonical record columns.
+    One narrow projection chain end-to-end (scan -> project)."""
+    cfg = cfg or LinkageConfig()
+    wide = normalized_fields(documents, cfg)
 
     def build():
         # extract_fields emits exactly doc_id, spans, source and one
@@ -222,31 +222,7 @@ class LinkagePipeline:
         # satisfies the aggregate's distribution, so no second
         # exchange), instead of a 192-partition dedup shuffle followed
         # by a full round-robin reshuffle of the deduped pairs.
-        n_score_parts = (
-            self.spark.sparkContext.defaultParallelism
-            * cfg.score_partitions_per_core
-            if cfg.score_partitions_per_core > 0
-            else None
-        )
-        if resuming_pairs:
-            # don't even BUILD the candidate plan: generate_candidates
-            # runs eager jobs at plan-build time (key-table pin, SN
-            # global-rank checkpoint + offsets collect) that a resumed
-            # run must not pay.  _stage loads the checkpoint without
-            # invoking the compute thunk.
-            info["dropped_blocks"] = None
-            pairs = self._stage("pairs", None, info, fp)
-        else:
-            pairs, dropped = generate_candidates(
-                records,
-                cfg.blocking,
-                num_partitions=n_score_parts,
-                materialize_keys=cfg.materialize,
-            )
-            info["dropped_blocks"] = (
-                dropped.count() if self.store is not None else None
-            )
-            pairs = self._stage("pairs", pairs, info, fp)
+        pairs = self._pairs_stage(records, None, resuming_pairs, info, fp)
 
         wide = attach_pair_sides(pairs, records, SELF_COMPARE_FIELDS)
         scored = score_pairs_self(wide, with_jw=cfg.with_jw)
@@ -291,6 +267,41 @@ class LinkagePipeline:
             clusters=clusters,
             stage_info=info,
         )
+
+    def _pairs_stage(
+        self,
+        records: DataFrame,
+        records_right: DataFrame | None,
+        resuming: bool,
+        info: dict,
+        fp: str,
+    ) -> DataFrame:
+        """The candidate pairs stage, self or two-sided."""
+        if resuming:
+            # don't even BUILD the candidate plan: generate_candidates
+            # runs eager jobs at plan-build time (key-table pin, SN
+            # global-rank checkpoint + offsets collect) that a resumed
+            # run must not pay.  _stage loads the checkpoint without
+            # invoking the compute thunk.
+            info["dropped_blocks"] = None
+            return self._stage("pairs", None, info, fp)
+        cfg = self.cfg
+        per_core = cfg.score_partitions_per_core
+        pairs, dropped = generate_candidates(
+            records,
+            cfg.blocking,
+            records_right=records_right,
+            num_partitions=(
+                self.spark.sparkContext.defaultParallelism * per_core
+                if per_core > 0
+                else None
+            ),
+            materialize_keys=cfg.materialize,
+        )
+        info["dropped_blocks"] = (
+            dropped.count() if self.store is not None else None
+        )
+        return self._stage("pairs", pairs, info, fp)
 
     def _stage(
         self, name: str, df: DataFrame | None, info: dict, fp: str
@@ -353,10 +364,15 @@ class CrossLinkagePipeline:
         self, documents_left: DataFrame, documents_right: DataFrame
     ) -> LinkageResult:
         from ..config import CROSS_HW_FIELDS, CROSS_LDU_FIELDS
-        from ..operators.blocking import block_census, block_keys, candidate_pairs
         from ..operators.scoring import score_pairs_cross
 
         cfg = self.cfg
+        if cfg.sparsify_top_k:
+            raise ValueError(
+                "sparsify_top_k is self-linkage only (LinkagePipeline.run): "
+                "CrossLinkagePipeline clusters over the raw bipartite "
+                f"match edges (got sparsify_top_k={cfg.sparsify_top_k})."
+            )
         info: dict = {}
 
         min_width = self.spark.sparkContext.defaultParallelism
@@ -381,138 +397,20 @@ class CrossLinkagePipeline:
         resuming_pairs = self.store is not None and self.store.is_complete(
             "pairs", fp
         )
-        wide_l = normalize_fields(extract_fields(documents_left))
-        wide_r = normalize_fields(extract_fields(documents_right))
         # internal pins carry only the linkage columns (the spans
         # payload is never read by blocking/scoring/CC; see the self
         # pipeline's records pin for the measurement)
-        records_l = wide_l.select("doc_id", "source", *CROSS_HW_FIELDS)
-        records_r = wide_r.select("doc_id", "source", *CROSS_LDU_FIELDS)
+        records_l = normalized_fields(documents_left, cfg).select(
+            "doc_id", "source", *CROSS_HW_FIELDS
+        )
+        records_r = normalized_fields(documents_right, cfg).select(
+            "doc_id", "source", *CROSS_LDU_FIELDS
+        )
         if self.store is None and cfg.materialize:
             records_l = records_l.localCheckpoint(eager=False)
             records_r = records_r.localCheckpoint(eager=False)
 
-        if resuming_pairs:
-            # don't BUILD the candidate plan on resume: the key pins,
-            # census checkpoint, and SN global-rank offsets all run
-            # eager jobs at plan-build time.  _stage loads the
-            # checkpoint without invoking the compute thunk.
-            info["dropped_blocks"] = None
-            pairs = self._stage("pairs", None, info, fp)
-        else:
-            bc = cfg.blocking
-
-            def _build_key_tiers():
-                # cross-mode block tiers mirror the self pipeline: a
-                # block's pair volume is |left| * |right|, so the
-                # census runs over the UNION of both key tables;
-                # normal blocks go through the plain equi-join, hot
-                # blocks through the replicate-left salted join,
-                # blocks beyond the salted ceiling are dropped from
-                # both sides (the record still pairs through its
-                # other keys).
-                keys_l = block_keys(records_l, bc)
-                keys_r = block_keys(records_r, bc)
-                if cfg.materialize:
-                    keys_l = keys_l.localCheckpoint(eager=True)
-                    keys_r = keys_r.localCheckpoint(eager=True)
-                census = block_census(keys_l.unionByName(keys_r))
-                if cfg.materialize:
-                    # the census feeds FIVE broadcast filters below;
-                    # exchange reuse does not reliably collapse the
-                    # five aggregate subplans, and the census is tiny
-                    # (one row per distinct block key) — pin it once.
-                    census = census.localCheckpoint(eager=True)
-                over_cap = census.where(
-                    F.col("block_size") > bc.max_block_size
-                )
-                dropped = census.where(
-                    F.col("block_size")
-                    > bc.max_block_size * bc.salt_drop_factor
-                )
-                hot = over_cap.join(
-                    F.broadcast(dropped.select("block_key")),
-                    "block_key",
-                    "left_anti",
-                )
-                kept_l = keys_l.join(
-                    F.broadcast(over_cap.select("block_key")),
-                    "block_key",
-                    "left_anti",
-                )
-                kept_r = keys_r.join(
-                    F.broadcast(over_cap.select("block_key")),
-                    "block_key",
-                    "left_anti",
-                )
-                hot_l = keys_l.join(
-                    F.broadcast(hot.select("block_key")), "block_key"
-                )
-                hot_r = keys_r.join(
-                    F.broadcast(hot.select("block_key")), "block_key"
-                )
-                from ..operators.blocking import (
-                    salted_candidate_pairs_cross,
-                )
-
-                return (
-                    candidate_pairs(kept_l, kept_r, dedup=False).unionByName(
-                        salted_candidate_pairs_cross(
-                            hot_l, hot_r, salt=bc.salt_buckets, dedup=False
-                        )
-                    ),
-                    dropped,
-                )
-
-            def _build_sn():
-                # windowed sorted-neighborhood tier over the union of
-                # both sides — the same name-typo recall the self
-                # pipeline gets from its SN pass; without it cross
-                # candidates come only from soundex + contact keys.
-                from ..operators.blocking import (
-                    name_expr,
-                    sorted_neighborhood_pairs_cross,
-                )
-
-                return sorted_neighborhood_pairs_cross(
-                    records_l,
-                    records_r,
-                    name_expr(records_l, bc),
-                    name_expr(records_r, bc),
-                    window=bc.sn_window,
-                    materialize=cfg.materialize,
-                )
-
-            n_score_parts = (
-                self.spark.sparkContext.defaultParallelism
-                * cfg.score_partitions_per_core
-                if cfg.score_partitions_per_core > 0
-                else None
-            )
-            if cfg.materialize and bc.sn_window > 0:
-                # overlap the two independent eager prep chains (key +
-                # census pins vs the SN global-rank build) — same
-                # barrier-floor removal as generate_candidates
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    f_tiers = ex.submit(_build_key_tiers)
-                    f_sn = ex.submit(_build_sn)
-                    (pairs, dropped), sn = f_tiers.result(), f_sn.result()
-                pairs = pairs.unionByName(sn)
-            else:
-                pairs, dropped = _build_key_tiers()
-                if bc.sn_window > 0:
-                    pairs = pairs.unionByName(_build_sn())
-            if n_score_parts:
-                pairs = pairs.repartition(
-                    n_score_parts, "doc_id_1", "doc_id_2"
-                )
-            pairs = pairs.dropDuplicates(["doc_id_1", "doc_id_2"])
-            info["dropped_blocks"] = (
-                dropped.count() if self.store is not None else None
-            )
-            pairs = self._stage("pairs", pairs, info, fp)
+        pairs = self._pairs_stage(records_l, records_r, resuming_pairs, info, fp)
 
         wide_pairs = attach_pair_sides(
             pairs,
@@ -549,4 +447,5 @@ class CrossLinkagePipeline:
             stage_info=info,
         )
 
+    _pairs_stage = LinkagePipeline._pairs_stage
     _stage = LinkagePipeline._stage

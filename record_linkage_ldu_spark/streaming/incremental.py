@@ -455,10 +455,11 @@ def incremental_linkage_batch(
          no rescan of old keys to re-count);
       3. candidate pairs = new-keys x stored-keys restricted to the
          blocks this batch TOUCHES (a broadcast semi-join of the new
-         block keys prunes the store side), plus new x new — with the
-         same census tiers as the batch pipeline: plain equi-join
-         under the cap, replicate-side salted join for hot blocks,
-         drop + census beyond the ceiling.  Old-old pairs cannot
+         block keys prunes the store side), plus new x new — through
+         the batch pipeline's tier stack (``blocking.tiered_pairs``,
+         two-sided, over the merged census): plain equi-join under
+         the cap, replicate-side salted join for hot blocks, drop +
+         census beyond the ceiling.  Old-old pairs cannot
          appear: one join side is always new.  The windowed
          sorted-neighborhood tier re-ranks the union (O(n) rank work,
          pair volume bounded by n*(window-1)) and keeps new-touching
@@ -515,10 +516,9 @@ def incremental_linkage_batch(
     from ..operators import rules
     from ..operators.blocking import (
         block_keys,
-        candidate_pairs,
-        salted_candidate_pairs_cross,
         sn_name_key,
         sorted_neighborhood_pairs,
+        tiered_pairs,
     )
     from ..operators.cc import connected_components, stable_cluster_ids
     from ..operators.scoring import (
@@ -585,17 +585,9 @@ def incremental_linkage_batch(
         census = new_counts.select(
             "block_key", F.col("_n_new").alias("block_size")
         )
-    # pinned: feeds three tier filters now and is persisted at the end
+    # pinned: feeds the tier filters now and is persisted at the end
     # (overwriting the file it was derived from)
     census = census.localCheckpoint(eager=True)
-
-    over_cap = census.where(F.col("block_size") > bc.max_block_size)
-    dropped = census.where(
-        F.col("block_size") > bc.max_block_size * bc.salt_drop_factor
-    )
-    hot = over_cap.join(
-        F.broadcast(dropped.select("block_key")), "block_key", "left_anti"
-    )
 
     # store side of the pair join: only blocks TOUCHED by this batch
     # (broadcast semi-join on the new block keys — per-batch join
@@ -612,12 +604,6 @@ def incremental_linkage_batch(
     all_keys = new_keys.unionByName(store_keys).localCheckpoint(eager=True)
     n_key_rows = all_keys.count()
 
-    kept_new = new_keys.join(
-        F.broadcast(over_cap.select("block_key")), "block_key", "left_anti"
-    )
-    kept_all = all_keys.join(
-        F.broadcast(over_cap.select("block_key")), "block_key", "left_anti"
-    )
     # new x (old ∪ new): old-old pairs cannot appear (left side is
     # always new); new-new pairs appear in both orientations and
     # collapse in the final dedup.  The new side is EXPLICITLY
@@ -628,13 +614,8 @@ def incremental_linkage_batch(
     # the store-side shuffle map stage first).  Micro-batches are
     # driver-broadcastable by contract — a backfill-sized load should
     # run the batch pipeline instead.
-    pairs = candidate_pairs(F.broadcast(kept_new), kept_all, dedup=False)
-    hot_new = new_keys.join(F.broadcast(hot.select("block_key")), "block_key")
-    hot_all = all_keys.join(F.broadcast(hot.select("block_key")), "block_key")
-    pairs = pairs.unionByName(
-        salted_candidate_pairs_cross(
-            F.broadcast(hot_new), hot_all, salt=bc.salt_buckets, dedup=False
-        )
+    pairs, dropped = tiered_pairs(
+        new_keys, bc, keys_right=all_keys, census=census, broadcast_left=True
     )
     if bc.sn_window > 0:
         name, has_name = sn_name_key(all_records, bc)

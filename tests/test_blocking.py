@@ -10,15 +10,20 @@ from record_linkage_ldu_spark.operators.blocking import (
     candidate_pairs,
     cap_blocks,
     sorted_neighborhood_pairs,
+    tiered_pairs,
 )
 from record_linkage_ldu_spark.plans.linkage import records_view
 from record_linkage_ldu_spark.sources.datagen import labeled_pairs
+
+# the key roster these tests were written against: the sn: prefix
+# key on, the windowed pass (not a key family) irrelevant here
+_SN_PREFIX = BlockingConfig(use_sorted_neighborhood=True)
 
 
 def test_pair_hygiene(spark, tiny_gen):
     """No self pairs, no (a,b)+(b,a) duplicates."""
     records = records_view(tiny_gen.select("doc_id", "spans"))
-    pairs = candidate_pairs(block_keys(records)).cache()
+    pairs = candidate_pairs(block_keys(records, _SN_PREFIX)).cache()
     assert pairs.where(F.col("doc_id_1") >= F.col("doc_id_2")).count() == 0
     assert (
         pairs.groupBy("doc_id_1", "doc_id_2").count().where("count > 1").count()
@@ -33,7 +38,7 @@ def test_blocking_recall_vs_crossjoin(spark, tiny_gen):
     is the labeled positives themselves: complete over intra-entity
     pairs.)"""
     records = records_view(tiny_gen.select("doc_id", "spans"))
-    pairs = candidate_pairs(block_keys(records))
+    pairs = candidate_pairs(block_keys(records, _SN_PREFIX))
     lab = labeled_pairs(tiny_gen.select("doc_id", "entity_id"))
     positives = lab.where("is_match")
     missed = positives.join(
@@ -48,9 +53,7 @@ def test_blocking_recall_vs_crossjoin(spark, tiny_gen):
 def test_block_cap_tiers(spark):
     """Blocks over the plain-join cap leave ``kept``; only blocks over
     cap*salt_drop_factor land in ``dropped`` (the middle tier belongs
-    to the salted join, covered by hot_blocks)."""
-    from record_linkage_ldu_spark.operators.blocking import hot_blocks
-
+    to the salted join of ``tiered_pairs``)."""
     rows = [(f"d{i}", "hot") for i in range(50)] + [("x1", "cold"), ("x2", "cold")]
     keys = spark.createDataFrame(rows, ["doc_id", "block_key"])
     cfg = BlockingConfig(max_block_size=10, salt_drop_factor=2)  # ceiling 20
@@ -58,11 +61,14 @@ def test_block_cap_tiers(spark):
     assert [r["block_key"] for r in dropped.collect()] == ["hot"]
     assert kept.where("block_key = 'hot'").count() == 0
     assert kept.where("block_key = 'cold'").count() == 2
-    assert hot_blocks(keys, cfg).count() == 0  # 50 > ceiling: not salt tier
+    # 50 > ceiling: not salt tier, only the cold pair survives
+    assert tiered_pairs(keys, cfg)[0].count() == 1
     cfg2 = BlockingConfig(max_block_size=10, salt_drop_factor=16)  # ceiling 160
     kept2, dropped2 = cap_blocks(keys, cfg2)
     assert dropped2.count() == 0
-    assert hot_blocks(keys, cfg2).where("block_key = 'hot'").count() == 50
+    assert kept2.where("block_key = 'hot'").count() == 0
+    # the hot block pairs through the salted tier instead
+    assert tiered_pairs(keys, cfg2)[0].count() == 1 + 50 * 49 // 2
     census = {r["block_key"]: r["block_size"] for r in block_census(keys).collect()}
     assert census == {"hot": 50, "cold": 2}
 
@@ -119,13 +125,9 @@ def test_salted_triangle_join_equivalence(spark):
 
 
 def test_three_tier_candidate_generation(spark):
-    """candidate_pairs_capped: plain tier + salted hot tier together
-    cover every block up to the drop ceiling; blocks beyond it are
-    dropped and reported."""
-    from record_linkage_ldu_spark.operators.blocking import (
-        candidate_pairs_capped,
-    )
-
+    """tiered_pairs: plain tier + salted hot tier together cover every
+    block up to the drop ceiling, each pair once per key; blocks
+    beyond it are dropped and reported."""
     rows = (
         [(f"n{i}", "normal") for i in range(4)]          # size 4: plain
         + [(f"h{i:02d}", "hotkey") for i in range(30)]   # size 30: salted
@@ -133,8 +135,10 @@ def test_three_tier_candidate_generation(spark):
     )
     keys = spark.createDataFrame(rows, ["doc_id", "block_key"])
     cfg = BlockingConfig(max_block_size=10, salt_buckets=4, salt_drop_factor=10)
-    pairs, dropped = candidate_pairs_capped(keys, cfg)
-    got = {(r["doc_id_1"], r["doc_id_2"]) for r in pairs.collect()}
+    pairs, dropped = tiered_pairs(keys, cfg)
+    rows_out = pairs.collect()
+    got = {(r["doc_id_1"], r["doc_id_2"]) for r in rows_out}
+    assert len(rows_out) == len(got) == 4 * 3 // 2 + 30 * 29 // 2
     expected = {
         (r["doc_id_1"], r["doc_id_2"])
         for r in candidate_pairs(
@@ -182,6 +186,19 @@ def test_salted_cross_pairs_equal_plain_join(spark):
         if int(p[0][1:]) % 3 == 0 and int(p[1][1:]) % 4 == 0
     }
     assert len(salted_rows) == len(salted) + len(multi_key)
+    # the same tables through the two-sided tier stack (hot block 95
+    # rows, warm 28): a cap of 10 salts both, a cap of 30 pairs warm
+    # through the plain join — the raw rows match either way, with or
+    # without the left-side broadcast hint
+    for cap in (10, 30):
+        cfg = BlockingConfig(max_block_size=cap, salt_buckets=4)
+        for hint in (False, True):
+            tiered_rows = tiered_pairs(
+                left, cfg, keys_right=right, broadcast_left=hint
+            )[0].collect()
+            assert sorted(map(tuple, tiered_rows)) == sorted(
+                map(tuple, salted_rows)
+            ), (cap, hint)
 
 
 def test_rare_token_blocking_df_window(spark):

@@ -618,7 +618,9 @@ def test_delete_documents_tombstone_semantics(spark, tmp_path):
     # window-free blocking: per-record keys only, so a fresh run over
     # the survivors is pair-for-pair comparable (the SN window tier
     # re-ranks neighbors and is deliberately not re-run on delete)
-    cfg = LinkageConfig(blocking=BlockingConfig())
+    cfg = LinkageConfig(
+        blocking=BlockingConfig(sn_window=0, use_sorted_neighborhood=True)
+    )
     docs = _docs(spark).localCheckpoint(eager=True)
     store = str(tmp_path / "store")
     incremental_linkage_batch(spark, docs, store, cfg=cfg)
@@ -905,14 +907,10 @@ def _tiered_cfg():
     """Default blocking with a tiny cap: on the sf0.001 fixture the
     12-doc soundex blocks fall in the drop tier and the 3-6 doc blocks
     in the salted tier, so every tier and the drop census run."""
-    from dataclasses import replace
-
-    from record_linkage_ldu_spark.plans.linkage import default_blocking
+    from record_linkage_ldu_spark.operators.blocking import BlockingConfig
 
     return LinkageConfig(
-        blocking=replace(
-            default_blocking(), max_block_size=2, salt_drop_factor=3
-        )
+        blocking=BlockingConfig(max_block_size=2, salt_drop_factor=3)
     )
 
 

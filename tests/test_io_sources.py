@@ -158,8 +158,8 @@ def test_run_linkage_cross_mode(spark, tiny_gen, tmp_path):
 
 def test_cli_configs_use_pipeline_blocking_defaults():
     """Both CLIs build the pipeline's blocking defaults (windowed
-    sorted-neighborhood on, sn: prefix key off), not the bare
-    BlockingConfig defaults, and change only max_block_size."""
+    sorted-neighborhood on, sn: prefix key off) and change only
+    max_block_size."""
     import argparse
     import importlib.util
     from dataclasses import replace

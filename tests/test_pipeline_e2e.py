@@ -246,13 +246,9 @@ def test_pipeline_all_r4c_knobs_on_keeps_f1(spark, small_gen):
     clean many-copy entities deliberately trades their recall for the
     degree bound, which is the knob's documented contract, not a
     bug."""
-    import dataclasses
+    from record_linkage_ldu_spark.operators.blocking import BlockingConfig
 
-    from record_linkage_ldu_spark.plans.linkage import default_blocking
-
-    blk = dataclasses.replace(
-        default_blocking(), use_nysiis=True, use_nickname_soundex=True
-    )
+    blk = BlockingConfig(use_nysiis=True, use_nickname_soundex=True)
     res = _run(spark, small_gen, blocking=blk, sparsify_top_k=8)
     lab = labeled_pairs(small_gen.select("doc_id", "entity_id"))
     pred = clusters_to_pairs(res.clusters)
@@ -315,6 +311,57 @@ def test_fold_accents_knob_recovers_accented_match(spark):
     n_base = base.clusters.select("cluster_id").distinct().count()
     n_fold = folded.clusters.select("cluster_id").distinct().count()
     assert n_base == 2 and n_fold == 1
+
+
+def test_cross_pipeline_honours_normalize_knobs(spark):
+    """CrossLinkagePipeline normalizes both sides through the same
+    extract -> fold -> normalize prefix as records_view:
+    ``fold_accents`` links an accented left doc to its unaccented
+    right twin through the exact-name rule, as in the self pipeline."""
+    from record_linkage_ldu_spark.plans.linkage import CrossLinkagePipeline
+
+    schema = (
+        "doc_id string, spans array<struct<"
+        "kind string, text string, media_ref string, offset int>>"
+    )
+    left = spark.createDataFrame(
+        [("l1", [("name", "Müller GmbH", None, 0)])], schema
+    )
+    right = spark.createDataFrame(
+        [("r1", [("name", "Muller GmbH", None, 0)])], schema
+    )
+
+    def matched(cfg):
+        res = CrossLinkagePipeline(spark, cfg).run(left, right)
+        return [tuple(r) for r in res.matches.select("doc_id_1", "doc_id_2").collect()]
+
+    assert matched(LinkageConfig()) == []
+    assert matched(LinkageConfig(fold_accents=True)) == [("l1", "r1")]
+
+
+def test_cross_pipeline_rejects_self_only_knobs(spark):
+    """Knobs the cross pipeline cannot honour fail loudly, naming the
+    field, instead of being ignored."""
+    import pytest
+
+    from record_linkage_ldu_spark.operators.blocking import BlockingConfig
+    from record_linkage_ldu_spark.plans.linkage import CrossLinkagePipeline
+
+    docs = spark.createDataFrame(
+        [("l1", [("name", "acme", None, 0)])],
+        "doc_id string, spans array<struct<"
+        "kind string, text string, media_ref string, offset int>>",
+    )
+    right = docs.withColumn("doc_id", F.lit("r1"))
+    for cfg, field in (
+        (LinkageConfig(sparsify_top_k=2), "sparsify_top_k"),
+        (
+            LinkageConfig(blocking=BlockingConfig(use_qgram_name=True)),
+            "use_qgram_name",
+        ),
+    ):
+        with pytest.raises(ValueError, match=field):
+            CrossLinkagePipeline(spark, cfg).run(docs, right)
 
 
 def test_unicode_names_knob_links_cjk_duplicates(spark):

@@ -370,7 +370,7 @@ that number here, no matter how it is written.
 ## Where the scaling goes (phase decomposition, measured)
 
 Eagerly materializing each pipeline phase at both levels (same input,
-528k docs, `tools/profile_phases.py`, measured back-to-back on the
+528k docs, the since-retired `tools/profile_phases.py`, measured back-to-back on the
 throttled late-day host — the ratios, not the absolute walls, are the
 signal) shows the compute-bound stage scales at the hardware ceiling
 while single-JVM orchestration does not:
@@ -409,8 +409,9 @@ shrinks 4x, and the single-JVM scheduler/allocator contention
 measured here does not exist — the scoring-stage number is the
 representative one for the north-rule criterion.
 
-Reproduce: `python tools/bench_scaling.py` (end-to-end) and
-`python tools/profile_phases.py <cpus> <mult>` (phase decomposition).
+Reproduce: `python tools/bench_scaling.py` (end-to-end); per-stage
+costs come from linkbench's traced run (`python3 linkbench/run.py
+--workload self --trace 1`).
 (env: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_SCALE_MULT`,
 `SPARK_GRAFT_SCALE_LEVELS`, `SPARK_GRAFT_SCALE_REPS`).
 

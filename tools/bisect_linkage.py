@@ -34,10 +34,8 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from record_linkage_ldu_spark.session import build_session
 from record_linkage_ldu_spark.sources.synth import synth_documents
-from record_linkage_ldu_spark.plans.linkage import (
-    LinkageConfig, LinkagePipeline, default_blocking,
-)
-import dataclasses
+from record_linkage_ldu_spark.operators.blocking import BlockingConfig
+from record_linkage_ldu_spark.plans.linkage import LinkageConfig, LinkagePipeline
 
 spark = build_session(app_name="bisect", master="local[32]")
 spark.sparkContext.setLogLevel("ERROR")
@@ -47,8 +45,7 @@ docs = synth_documents(
 docs.count()
 
 sn = {sn}
-bc = dataclasses.replace(default_blocking(), sn_window=sn)
-cfg = LinkageConfig(blocking=bc)
+cfg = LinkageConfig(blocking=BlockingConfig(sn_window=sn))
 t0 = time.time()
 res = LinkagePipeline(spark, cfg).run(docs)
 n_matches = res.matches.count()

@@ -4,7 +4,8 @@
 Asserts the plan properties the engine's scale story depends on:
 
   1. pair dedup fused with the scoring repartition = ONE exchange
-     above the candidate union (no dedup shuffle + reshuffle);
+     above the candidate union (no dedup shuffle + reshuffle), in self
+     and cross mode;
   2. parquet scans under projection/filter push columns and predicates
      into the scan (ReadSchema pruned, PushedFilters non-empty);
   3. the linkage plan contains no CartesianProduct / BroadcastNestedLoop
@@ -53,6 +54,7 @@ def main(sf_dir: str) -> int:
     from record_linkage_ldu_spark.plans.linkage import (
         LinkageConfig,
         LinkagePipeline,
+        normalized_fields,
         records_view,
     )
     from record_linkage_ldu_spark.session import build_session
@@ -66,16 +68,33 @@ def main(sf_dir: str) -> int:
     records = records_view(docs, cfg)
 
     # 1. fused dedup: exactly one exchange between the pair union and
-    # the dedup aggregate, an explicit REPARTITION_BY_NUM
-    pairs, _ = generate_candidates(records, cfg.blocking, num_partitions=32)
-    plan = executed_plan(pairs)
-    top = plan.split("Union", 1)[0]
-    n_exchanges = top.count("Exchange hashpartitioning(doc_id_1")
-    check(
-        "pair dedup single exchange",
-        n_exchanges == 1 and "REPARTITION_BY_NUM" in top,
-        f"exchanges above union: {n_exchanges}",
+    # the dedup aggregate, an explicit REPARTITION_BY_NUM — for self
+    # linkage and for the two-sided (cross) form
+    from record_linkage_ldu_spark.config import CROSS_HW_FIELDS, CROSS_LDU_FIELDS
+
+    is_left = F.substring("doc_id", 1, 1) == "a"
+    cross_sides = (
+        normalized_fields(docs.where(is_left), cfg).select(
+            "doc_id", "source", *CROSS_HW_FIELDS
+        ),
+        normalized_fields(docs.where(~is_left), cfg).select(
+            "doc_id", "source", *CROSS_LDU_FIELDS
+        ),
     )
+    for mode, (left, right) in (
+        ("self", (records, None)),
+        ("cross", cross_sides),
+    ):
+        pairs, _ = generate_candidates(
+            left, cfg.blocking, records_right=right, num_partitions=32
+        )
+        top = executed_plan(pairs).split("Union", 1)[0]
+        n_exchanges = top.count("Exchange hashpartitioning(doc_id_1")
+        check(
+            f"pair dedup single exchange ({mode})",
+            n_exchanges == 1 and "REPARTITION_BY_NUM" in top,
+            f"exchanges above union: {n_exchanges}",
+        )
 
     # 2. pushdown and pruning on a raw parquet scan
     li = (
@@ -185,14 +204,17 @@ def main(sf_dir: str) -> int:
     # broadcast, so the stored key table is never shuffled per batch
     # (a localCheckpointed new side has no size stats — without the
     # explicit hint Spark plans a sort-merge join that exchanges BOTH
-    # sides, including the whole store).
+    # sides, including the whole store).  The plan is the tier stack
+    # called with the arguments incremental_linkage_batch passes: the
+    # pinned new keys, the pinned new-and-stored keys and the pinned
+    # census.
     import tempfile as _tf
 
     from record_linkage_ldu_spark.streaming.incremental import (
         incremental_linkage_batch,
     )
     from record_linkage_ldu_spark.operators.blocking import (
-        block_keys, candidate_pairs,
+        block_census, block_keys, tiered_pairs,
     )
 
     with _tf.TemporaryDirectory() as td:
@@ -207,9 +229,16 @@ def main(sf_dir: str) -> int:
             ),
             cfg.blocking,
         ).localCheckpoint(eager=True)
-        inc_plan = executed_plan(
-            candidate_pairs(F.broadcast(new_keys), stored, dedup=False)
+        all_keys = new_keys.unionByName(stored).localCheckpoint(eager=True)
+        census = block_census(all_keys).localCheckpoint(eager=True)
+        inc_pairs, _ = tiered_pairs(
+            new_keys,
+            cfg.blocking,
+            keys_right=all_keys,
+            census=census,
+            broadcast_left=True,
         )
+        inc_plan = executed_plan(inc_pairs)
         check(
             "incremental pair join broadcasts the new side",
             "BroadcastHashJoin" in inc_plan

@@ -46,15 +46,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def linkage_config(args):
     """The pipeline's default configuration with this job's options."""
-    from dataclasses import replace
-
-    from record_linkage_ldu_spark.plans.linkage import (
-        LinkageConfig,
-        default_blocking,
-    )
+    from record_linkage_ldu_spark.operators.blocking import BlockingConfig
+    from record_linkage_ldu_spark.plans.linkage import LinkageConfig
 
     return LinkageConfig(
-        blocking=replace(default_blocking(), max_block_size=args.max_block_size)
+        blocking=BlockingConfig(max_block_size=args.max_block_size)
     )
 
 
