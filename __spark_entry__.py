@@ -8,8 +8,8 @@ records derived from sf0.001 testdata.
 SURVEY.md §2 (normalizers, filters, record surgery, blocking + caps,
 candidate pairs, similarity scores, combined score, rule masks, mask
 stats, connected components, cluster stats, P/R/F1 evaluation) plus
-the training-data-pipeline extras (exact/minhash/jaccard dedup, text
-analysis, ANN, windowed events, sessionization, TPC-H-style aggs).
+the document extras still in the library (exact/minhash/jaccard
+dedup, ANN, media).
 
 Oracle notes:
   * linkage queries run over a deterministic record table synthesized
@@ -42,10 +42,8 @@ from record_linkage_ldu_spark.config import (
 from record_linkage_ldu_spark.functions import normalizers as N
 from record_linkage_ldu_spark.functions import text as T
 from record_linkage_ldu_spark.functions.similarity import lev_sim_col, sql_lev_sim
-from record_linkage_ldu_spark.operators import ann, corpus, dedup, rules, temporal
+from record_linkage_ldu_spark.operators import ann, dedup, rules
 from record_linkage_ldu_spark.operators import evaluate as ev
-from record_linkage_ldu_spark.operators import fs_em as fs_em_mod
-from record_linkage_ldu_spark.operators import pprl
 from record_linkage_ldu_spark.operators.evaluate import (
     cluster_diff,
     presentation_view,
@@ -123,10 +121,6 @@ from record_linkage_ldu_spark.sources.synth import (
     synth_records,
     synth_sql_cte,
 )
-from record_linkage_ldu_spark.streaming.incremental import (
-    sessionize,
-    windowed_event_counts,
-)
 
 MAX_BLOCK = 1000
 # deterministic random hyperplanes for the rh-LSH entries (testdata
@@ -136,14 +130,9 @@ _PAIR_FIELDS = (
     "name", "phone", "email", "group", "address", "city", "state", "zip",
     "country",
 )
-# identity-bearing fields for the FS-EM fit (the low-cardinality
-# city/state/country columns agree by chance too often to separate
-# the mixture)
-_FS_FIELDS = ("name", "phone", "email", "address")
 _VSO_FIELDS = ("name", "email", "phone", "zip")
 # candidate functional dependencies to profile (no "group": it is a
 # reserved word in the DuckDB twin and the gold label anyway)
-_BM25_TERMS = ("spark", "window", "merge", "vector")
 _FD_DEPS = (
     ("zip", "city"),
     ("zip", "state"),
@@ -175,7 +164,7 @@ def _tune(spark: SparkSession) -> None:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true"
         )
-        # day-grain date_trunc (hypertable_rollup) is TZ-sensitive;
+        # timestamp casts and truncation are TZ-sensitive;
         # the DuckDB oracle's naive timestamps are implicitly UTC
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
@@ -674,53 +663,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return res.clusters
 
 
-def _asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    left = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    right = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", "value"
-    )
-    return temporal.asof_join(
-        left, right, on="user_id", value_cols=("value",)
-    ).select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-        F.round("value", 4).alias("value"),
-        F.round("value_asof", 4).alias("click_value"),
-        F.unix_timestamp("ts_asof").alias("click_epoch"),
-    )
-
-
-def _range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    iv = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        "user_id",
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL '30' MINUTE")).alias("end_ts"),
-    )
-    pt = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        "ts",
-        "value",
-    )
-    out = temporal.bucketed_range_join(
-        iv, pt, on="user_id", bucket_seconds=1800
-    )
-    return out.select(
-        "error_id",
-        "user_id",
-        "purchase_id",
-        F.unix_timestamp("start_ts").alias("start_epoch"),
-        F.unix_timestamp("ts").alias("purchase_epoch"),
-        F.round("value", 4).alias("value"),
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -880,42 +822,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             threshold=0.3,
         )
     )
-    # the pipeline-level dedup DECISION: connected components over the
-    # near-dup pairs, canonical per component, keep-flag for filtering
-    # entity-aware train/valid/test split: assignment is a hash of
-    # the near-dup CLUSTER id, so near-duplicates never straddle
-    # train and test (the intra-corpus leak decontamination can't see)
-    q["leakage_safe_split"] = lambda s, d: corpus.leakage_safe_split(
-        _t(s, d, "documents"),
-        dedup.near_duplicate_keep_list(_t(s, d, "documents"), threshold=0.3),
-    )
     # soft dedup: weight = 1/cluster_size instead of drop — a cluster
     # of n near-copies contributes one doc's worth of training mass
-    # dataset-version audit: added/removed/changed docs between two
-    # snapshots (v2 = deterministic derivative of the documents table)
-    q["corpus_snapshot_diff"] = lambda s, d: corpus.snapshot_diff(
-        _t(s, d, "documents"),
-        _t(s, d, "documents")
-        .where(F.col("doc_id") % 11 != 0)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" v2"))
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            _t(s, d, "documents")
-            .where(F.col("doc_id") % 13 == 0)
-            .select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-            )
-        ),
-    )
     q["dedup_weights"] = lambda s, d: dedup.dedup_weights(
         dedup.near_duplicate_keep_list(_t(s, d, "documents"), threshold=0.3)
     )
+    # the pipeline-level dedup DECISION: connected components over the
+    # near-dup pairs, canonical per component, keep-flag for filtering
     q["near_dup_keep_list"] = lambda s, d: dedup.near_duplicate_keep_list(
         _t(s, d, "documents"), threshold=0.3
     )
@@ -972,119 +885,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["winnow_near_dups"] = lambda s, d: dedup.winnow_near_duplicates(
         _t(s, d, "documents"), min_shared=2
     )
-    q["token_count"] = lambda s, d: _t(s, d, "documents").select(
-        "doc_id", T.token_count(F.col("text")).alias("n_tokens")
-    )
-    q["lang_id"] = lambda s, d: _t(s, d, "documents").select(
-        "doc_id", T.lang_id(F.col("text")).alias("lang_pred")
-    )
-    q["quality_score"] = lambda s, d: _t(s, d, "documents").select(
-        "doc_id", T.quality_score(F.col("text")).alias("quality")
-    )
-
-    # ---------- corpus pipeline (operators/corpus.py) ----------
-    # composed C4-style cleaning with an observable reject reason
-    q["corpus_filter"] = lambda s, d: corpus.corpus_filter_flags(
-        _t(s, d, "documents"), min_tokens=20, min_quality=0.3
-    )
-    # per-stratum lexical diversity (type-token / hapax ratios): the
-    # Zipf-tail health check that catches template floods
-    q["vocab_stats"] = lambda s, d: corpus.vocab_stats(
-        _t(s, d, "documents")
-    )
-    # per-source hard cap (max N docs per host): the anti-spam quota a
-    # rate-based sample can't express; skew-safe two-pass ranking
-    q["source_quota_sample"] = lambda s, d: corpus.source_quota_sample(
-        _t(s, d, "documents"), group_col="source", cap=10
-    )
-    # deterministic per-stratum hash sampling (corpus mixing)
-    q["stratified_sample"] = lambda s, d: corpus.stratified_sample(
-        _t(s, d, "documents"),
-        strata_col="lang",
-        rates={"en": 0.5, "fr": 0.8},
-        default_rate=0.25,
-    )
-    # target-mixture downsampling: keep probabilities DERIVED from the
-    # measured stratum frequencies (DoReMi-style reweighting as pure
-    # downsampling) — stratified_sample takes rates as given, this
-    # computes them from the corpus
-    q["mixture_rebalance"] = lambda s, d: corpus.mixture_rebalance(
-        _t(s, d, "documents"),
-        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
-    )
-    # the upsampling twin: epochs-per-source with per-doc copy
-    # ordinals (scarce strata repeat, total output ~N shaped as
-    # targets)
-    q["mixture_epochs"] = lambda s, d: corpus.mixture_epochs(
-        _t(s, d, "documents"),
-        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
-    )
-    # per-doc novelty: share of the doc's shingles unique to it —
-    # the document-level redundancy dial (template floods score low
-    # even when no single pair crosses a near-dup threshold)
-    q["shingle_novelty"] = lambda s, d: corpus.shingle_novelty(
-        _t(s, d, "documents")
-    )
-    # the flood report: top-N most-duplicated shingles per language —
-    # names the repeated content itself (banners, footers, templates)
-    q["template_floods"] = lambda s, d: corpus.template_floods(
-        _t(s, d, "documents")
-    )
-    # per-stratum mixing evidence (requested vs realized rates)
-    q["mixture_stats"] = lambda s, d: corpus.mixture_stats(
-        _t(s, d, "documents"),
-        strata_col="lang",
-        rates={"en": 0.5, "fr": 0.8},
-        default_rate=0.25,
-    )
-    # per-stratum token-length percentiles (length-gate tuning view)
-    q["token_percentiles"] = lambda s, d: corpus.token_percentiles(
-        _t(s, d, "documents")
-    )
-    # token-budgeted output sharding (two-pass distributed cumsum)
-    q["token_budget_shards"] = lambda s, d: corpus.token_budget_shards(
-        _t(s, d, "documents"), budget=5000
-    )
-    # benchmark decontamination: winnowing-fingerprint overlap between
-    # the corpus and a predicate-held-out "eval set"
-    q["decontaminate"] = lambda s, d: corpus.decontaminate(
-        _t(s, d, "documents").where(F.col("doc_id") % 37 != 0),
-        _t(s, d, "documents").where(F.col("doc_id") % 37 == 0),
-        min_shared=2,
-    )
-    # feature-hashed linear quality model (classifier-filter hook)
-    q["hashed_bow_score"] = lambda s, d: corpus.hashed_bow_score(
-        _t(s, d, "documents")
-    )
-    # Gopher-style repetition quality signals (row-local, no shuffle)
-    q["repetition_signals"] = lambda s, d: corpus.repetition_signals(
-        _t(s, d, "documents")
-    )
-    # overlapping token-window chunking (corpus docs -> training rows)
-    q["chunk_documents"] = lambda s, d: corpus.chunk_documents(
-        _t(s, d, "documents"), chunk=32, overlap=8
-    )
-    # deterministic sharded training-order shuffle
-    q["corpus_shuffle"] = lambda s, d: corpus.corpus_shuffle(
-        _t(s, d, "documents"), n_shards=16, seed="r3"
-    )
-    # global (non-sharded) order via the two-pass global_ranks recipe
-    q["corpus_shuffle_global"] = lambda s, d: corpus.corpus_shuffle_global(
-        _t(s, d, "documents"), seed="r3"
-    )
-    # PII redaction over record free text (emails/phones live in the
-    # synthetic records; counts are per-stage so they equal the number
-    # of replacements made)
-    q["pii_scrub"] = lambda s, d: (
-        synth_records(_t(s, d, "customer"))
-        .select(
-            "doc_id",
-            T.pii_scrub(
-                F.concat_ws(" ", "name", "phone", "email", "address")
-            ).alias("p"),
-        )
-        .select("doc_id", "p.text", "p.n_emails", "p.n_ips", "p.n_phones")
-    )
 
     # ---------- ANN over embeddings ----------
     q["embedding_near_dups"] = lambda s, d: ann.embedding_near_duplicates(
@@ -1131,139 +931,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _t(s, d, "embeddings"), threshold=0.2, modulus=64
     )
 
-    # ---------- events: windows / sessions ----------
-    q["windowed_events"] = lambda s, d: windowed_event_counts(
-        _t(s, d, "events")
-    ).select(
-        F.unix_timestamp("window_start").alias("window_epoch"),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
-    q["sessionize"] = lambda s, d: sessionize(_t(s, d, "events")).select(
-        "event_id", "user_id", F.col("session_no").cast("long").alias("session_no")
-    )
-    # as-of join (union + one window, NO join node): each purchase
-    # sees the latest click at-or-before it per user — cross-checked
-    # against DuckDB's native ASOF JOIN, an independent implementation
-    q["asof_join_events"] = lambda s, d: _asof_join_events(s, d)
-    # bucketed range join: purchases inside 30-min error episodes —
-    # the interval explodes into fixed-width buckets, the point owns
-    # one bucket, so the theta-join becomes equi-join + exact filter
-    q["range_join_events"] = lambda s, d: _range_join_events(s, d)
-    # continuous aggregate: hour partials, day re-aggregated FROM the
-    # hour partials (one raw scan serves both grains)
-    q["hypertable_rollup"] = lambda s, d: temporal.hypertable_rollup(
-        _t(s, d, "events")
-    )
-    # gap filling over the hourly rollup: every bucket in each dim's
-    # observed range, zero-filled counts + locf'd totals, is_gap flag
-    q["gapfill_rollup"] = lambda s, d: temporal.gapfill(
-        temporal.hypertable_rollup(_t(s, d, "events"))
-        .where(F.col("grain") == "hour")
-        .select("dim", "bucket_epoch", "n", "total")
-    )
-    # corpus-trained unigram-LM quality: mean token log-prob under the
-    # corpus's own smoothed unigram distribution (CCNet-style filter)
-    q["unigram_lm_scores"] = lambda s, d: corpus.unigram_lm_scores(
-        _t(s, d, "documents")
-    )
-    # bigram conditional LM: order-sensitive — catches shuffled-word
-    # salad that keeps its unigram perplexity
-    q["bigram_lm_scores"] = lambda s, d: corpus.bigram_lm_scores(
-        _t(s, d, "documents")
-    )
-    # lang-id accuracy audit: predictions vs the corpus's own labels
-    q["lang_confusion"] = lambda s, d: corpus.lang_confusion(
-        _t(s, d, "documents")
-    )
-    # collocation mining (top adjacent pairs by PMI) — the phrase
-    # pass a vocabulary build runs before merging multiword units
-    q["pmi_collocations"] = lambda s, d: corpus.pmi_collocations(
-        _t(s, d, "documents"), min_count=20, top_k=50
-    )
-    # per-doc tf-idf keyword profiles (dedup explainability / cheap
-    # topic labels)
-    q["tfidf_keywords"] = lambda s, d: corpus.tfidf_keywords(
-        _t(s, d, "documents")
-    )
-    # per-stratum Zipf exponent: distribution-shape vocabulary health
-    q["zipf_slope"] = lambda s, d: corpus.zipf_slope(_t(s, d, "documents"))
     # functional-dependency profiling over the normalized records —
     # which column implications hold (g3 strength), driving blocking-
     # surrogate and rule-guard choices
     q["fd_profile"] = lambda s, d: profile_dependencies(
         _records(s, d), _FD_DEPS
-    )
-    # deterministic weighted sampling (Efraimidis-Spirakis A-ES keys):
-    # per-lang top-40 docs proportional to length — the weighted
-    # complement of stratified_sample, zero RNG state
-    q["weighted_sample"] = lambda s, d: corpus.weighted_sample(
-        _t(s, d, "documents"), "n_chars", 40, strata_col="lang"
-    )
-    # BM25 lexical retrieval (Lucene idf variant) — the sparse first-
-    # stage retriever next to the dense ANN family
-    q["bm25_search"] = lambda s, d: corpus.bm25_search(
-        _t(s, d, "documents"), _BM25_TERMS
-    )
-    # SCD2 temporal table: per-user event_type validity intervals,
-    # consecutive same-type runs collapsed (the asof join's inverse)
-    q["scd2_history"] = lambda s, d: temporal.scd2_history(
-        _t(s, d, "events"), "user_id", tracked=("event_type",)
-    ).select(
-        "user_id",
-        "event_type",
-        F.unix_timestamp("valid_from").alias("from_epoch"),
-        F.unix_timestamp("valid_to").alias("to_epoch"),
-        "version",
-    )
-    # CDC compaction: the single latest row per user (rn = 1)
-    q["latest_events"] = lambda s, d: temporal.latest_snapshot(
-        _t(s, d, "events"), "user_id"
-    ).select(
-        "event_id",
-        "user_id",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-        "event_type",
-        F.round("value", 4).alias("value"),
-    )
-
-    # ---------- relational workhorses ----------
-    # multi-grain cube: all four grouping sets off ONE scan (Spark
-    # Expand, one shuffle) — the OLAP complement of hypertable_rollup
-    q["cube_returns"] = lambda s, d: (
-        _t(s, d, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n_rows",
-            "sum_qty",
-        )
-    )
-    q["agg_pushdown_q1"] = lambda s, d: (
-        _t(s, d, "lineitem")
-        .where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 4).alias("sum_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("n_rows"),
-        )
-    )
-    q["broadcast_join_revenue"] = lambda s, d: (
-        _t(s, d, "orders")
-        .join(F.broadcast(_t(s, d, "customer")), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(
-            F.round(F.sum("o_totalprice"), 4).alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
     )
 
     # composite soundex keys — hash-green since r3: sql_soundex
@@ -1361,43 +1033,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["incremental_linkage_step"] = lambda s, d: _incremental_step(s, d)
     # measured ANN recall vs exact ground truth (deploy-gate metric)
     q["ann_recall"] = lambda s, d: _ann_recall(s, d)
-    # learned-weights BoW scorer (broadcast vocabulary lookup, same
-    # row-local plan as the hash stand-in)
-    q["hashed_bow_learned"] = lambda s, d: corpus.bow_score_weighted(
-        _t(s, d, "documents"), _BOW_WEIGHTS
-    )
-    # CCNet/RefinedWeb-style line-level boilerplate removal over a
-    # deterministically lined corpus (10-token lines + planted
-    # header/footer variants shared across docs)
-    q["line_dedup"] = lambda s, d: corpus.line_dedup(_lined_docs(s, d))
-    # URL canonicalization (crawl URL-level dedup key): case-variant
-    # hosts, default ports, www, tracking params, fragments and
-    # trailing slashes collapse to one key; n_same_url counts the
-    # collisions the canonicalizer recovered
-    q["url_canonicalize"] = lambda s, d: _url_canonicalize(s, d)
-    # Bloom-pre-filtered decontamination: same eval split as
-    # `decontaminate`, compact bit-position pre-filter before the
-    # exact join, false positives observable per doc (n_bloom_fp)
-    q["bloom_decontaminate"] = lambda s, d: corpus.bloom_decontaminate(
-        _t(s, d, "documents").where(F.col("doc_id") % 37 != 0),
-        _t(s, d, "documents").where(F.col("doc_id") % 37 == 0),
-        min_shared=2,
-    )
     # media-content blocking tier: records sharing an identical image
     # payload are linkage candidates — the text-free signal interleaved
     # documents add over flat records (the a/b/c copies of one entity
     # carry the same image under different refs).  Single key per doc
     # => no pair-dedup shuffle (dedup=False is exact here).
     q["media_block_pairs"] = lambda s, d: _media_block_pairs(s, d)
-    # EM-estimated Fellegi-Sunter parameters (Winkler): per-field m/u
-    # and likelihood-ratio weights learned from the candidate pairs —
-    # one bounded 2^F pattern-count aggregation, EM on the counts
-    q["fs_em_weights"] = lambda s, d: fs_em_mod.estimate_fs_weights(
-        s, _pair_scores(s, d), _FS_FIELDS, tau=0.85, iters=10
-    )
-    # ...and the fit applied back to the pairs: posterior match
-    # probability per candidate pair under the learned mixture
-    q["fs_match_probability"] = lambda s, d: _fs_match_prob(s, d)
     # rare-token blocking (token blocking with document-frequency
     # pruning — the Magellan/JedAI family): candidates share a name
     # token selective enough to mean something
@@ -1501,11 +1142,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # risk) to the top of the review queue
     q["edge_corroboration"] = lambda s, d: edge_corroboration(
         _matches(s, d).select("doc_id_1", "doc_id_2")
-    )
-    # Fellegi-Sunter three-way decision counts (link / clerical-review
-    # band / non-link) under the EM-fitted posterior
-    q["fs_decisions"] = lambda s, d: fs_em_mod.fs_decisions(
-        _fs_match_prob(s, d)
     )
     # perceptual near-dup image pairs: aHash sketches through the
     # SimHash hamming-banding machinery (real aHash pytest-gated on
@@ -1620,13 +1256,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["benford_profile"] = lambda s, d: benford_profile(
         _records(s, d), ("phone", "zip")
     )
-    # privacy-preserving linkage (Schnell et al. 2009): CLK bloom
-    # encodings of the name q-grams + Dice over the candidate pairs —
-    # the protocol when the two sources may not see each other's raw
-    # values; only the encoding table crosses the trust boundary
-    q["pprl_dice_scores"] = lambda s, d: pprl.dice_pairs(
-        pprl.bloom_encode(_records(s, d), "name"), _cand_pairs(s, d)
-    )
     # one-to-one constrained cross linkage: mutual-best-match
     # (symmetric argmax) assignment over the rule-accepted LDU×HW
     # pairs — each left record keeps at most one partner and vice
@@ -1717,16 +1346,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # unrecorded — the least-established entries must hit the hard signal
 # first.  _ordered() asserts the list and the dict stay in sync.
 _NEWEST_FIRST = [
-    # ---- ROUND-5 DRIVER WINDOW (first 50 = what CORRECTNESS_r05
-    # records; the driver provably takes the first 50 dict entries —
-    # verified against r1-r4 files).  Composition: the r5 addition,
-    # the 5 entries whose last driver status is a stale r02 ERR, and
-    # 44 of the 52 never-driver-checked entries (VERDICT r4 item 1).
-    # The 8 left outside (media_block_pairs, line_dedup,
-    # hashed_bow_learned, media_dedup, jw_pair_scores,
-    # blocking_recall, ivf_probe_topk, rh_lsh_ann_topk) are the
-    # family-redundant ones — every one is hash-green in the r4
-    # judge sweep and in tools/check_oracle.py runs. ----
+    # ---- DRIVER WINDOW (the driver records exactly the first 50
+    # dict entries — verified against the r1-r4 files).  The round-5
+    # composition, with the entries of the deleted corpus, Fellegi-
+    # Sunter EM, PPRL and URL families dropped and the next survivors
+    # moved up in order.  Left outside: family-redundant entries,
+    # every one hash-green in tools/check_oracle.py runs. ----
     "cjk_minhash_near_dups",
     "soundex_keys",
     "span_invariant_check",
@@ -1739,7 +1364,6 @@ _NEWEST_FIRST = [
     "review_queue",
     "match_explanations",
     "survivorship_conflicts",
-    "leakage_safe_split",
     "stable_cluster_ids",
     "cannot_link_audit",
     "canopy_assignments",
@@ -1755,13 +1379,11 @@ _NEWEST_FIRST = [
     "star_clusters",
     "group_linkage_scores",
     "soft_tfidf_scores",
-    "pprl_dice_scores",
     "profile_records",
     "blocking_family_stats",
     "cluster_repair",
     "threshold_curve",
     "media_phash_pairs",
-    "fs_decisions",
     "edge_corroboration",
     "cluster_cohesion",
     "monge_elkan_scores",
@@ -1770,15 +1392,9 @@ _NEWEST_FIRST = [
     "golden_records",
     "meta_blocking_pairs",
     "token_blocking_pairs",
-    "fs_match_probability",
-    "fs_em_weights",
-    "bloom_decontaminate",
-    "url_canonicalize",
     "incremental_linkage_step",
     "ann_recall",
     "semdedup",
-    # ---- previously driver-recorded (green in r1-r4 CORRECTNESS
-    # files) or judge-sweep green; order beyond 50 is cosmetic ----
     "nysiis_keys",
     "nickname_keys",
     "contact_canonical",
@@ -1786,34 +1402,15 @@ _NEWEST_FIRST = [
     "null_score_histogram",
     "pair_provenance",
     "blocking_miss_diagnosis",
-    "mixture_rebalance",
-    "mixture_epochs",
+    # ---- previously driver-recorded (green in r1-r4 CORRECTNESS
+    # files) or judge-sweep green; order beyond 50 is cosmetic ----
     "benford_profile",
     "sparsified_clusters",
-    "shingle_novelty",
-    "template_floods",
-    "cube_returns",
-    "latest_events",
-    "hypertable_rollup",
-    "range_join_events",
-    "asof_join_events",
-    "lang_confusion",
-    "zipf_slope",
-    "pmi_collocations",
-    "tfidf_keywords",
-    "weighted_sample",
-    "unigram_lm_scores",
-    "scd2_history",
-    "gapfill_rollup",
-    "bigram_lm_scores",
-    "bm25_search",
     "match_pagerank",
     "fd_profile",
     "minhash_recall",
     "refined_soundex_keys",
     "dl_pair_scores",
-    "vocab_stats",
-    "source_quota_sample",
     "clustering_agreement",
     "containment_near_dups",
     "cluster_growth_curve",
@@ -1828,10 +1425,7 @@ _NEWEST_FIRST = [
     "block_filtered_pairs",
     "capture_recapture",
     "cluster_error_taxonomy",
-    "corpus_snapshot_diff",
     "media_block_pairs",
-    "line_dedup",
-    "hashed_bow_learned",
     "media_features",
     "media_resize",
     "media_frame_sample",
@@ -1842,26 +1436,7 @@ _NEWEST_FIRST = [
     "rh_lsh_ann_topk",
     "lsh_ann_topk",
     "cosine_topk",
-    "windowed_events",
-    "sessionize",
-    "agg_pushdown_q1",
-    "broadcast_join_revenue",
     "embedding_near_dups",
-    "pii_scrub",
-    "corpus_shuffle_global",
-    "corpus_shuffle",
-    "chunk_documents",
-    "repetition_signals",
-    "hashed_bow_score",
-    "decontaminate",
-    "token_budget_shards",
-    "token_percentiles",
-    "mixture_stats",
-    "stratified_sample",
-    "corpus_filter",
-    "quality_score",
-    "lang_id",
-    "token_count",
     "winnow_near_dups",
     "winnow_fingerprints",
     "ngram_jaccard_dedup",
@@ -2293,8 +1868,8 @@ def _blocking_miss_diagnosis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _md5_mod_pick(c1: str, c2: str, mod: int):
-    """Deterministic ~1/mod pair pick with a DuckDB twin (md5 draw —
-    same recipe as corpus._uniform_draw)."""
+    """Deterministic ~1/mod pair pick with a DuckDB twin (md5 draw of
+    the pair's ids, first 32 bits, mod ``mod``)."""
     h = F.md5(F.concat_ws(":", F.col(c1), F.col(c2)))
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % mod) == 0
 
@@ -2597,73 +2172,6 @@ def _incremental_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lined_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic multi-line corpus for the line_dedup entry: the
-    synthetic documents are single-line word streams, so real lines
-    are derived — body = the doc's tokens grouped into 10-token lines,
-    bracketed by planted boilerplate (3 header variants keyed by
-    doc_id%3, 2 footer variants by doc_id%2 — each shared by ~a third/
-    half of the corpus, exactly the repeated-verbatim nav/copyright
-    shape line dedup exists to strip).  The DuckDB twin builds the
-    identical corpus (``_SQL_LINED`` CTE)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = T.tokens(F.coalesce(F.col("text"), F.lit("")))
-    staged = d.select("doc_id", toks.alias("_t"))
-    n_chunks = F.greatest(
-        F.lit(1),
-        F.floor((F.size("_t") + F.lit(9)) / F.lit(10)).cast("int"),
-    )
-    body = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - F.lit(1)),
-            lambda i: F.array_join(
-                F.slice("_t", i * F.lit(10) + F.lit(1), F.lit(10)), " "
-            ),
-        ),
-        "\n",
-    )
-    text2 = F.concat(
-        F.lit("hdr banner variant "),
-        F.pmod("doc_id", F.lit(3)).cast("string"),
-        F.lit("\n"),
-        body,
-        F.lit("\n"),
-        F.lit("footer copyright notice "),
-        F.pmod("doc_id", F.lit(2)).cast("string"),
-    )
-    return staged.select("doc_id", text2.alias("text"))
-
-
-_SQL_LINED = f"""
-        tok AS (
-            SELECT doc_id, {T.sql_tokens("coalesce(text, '')")} AS t
-            FROM documents
-        ),
-        ch AS (
-            SELECT doc_id, t,
-                   unnest(range(0, greatest(1, (len(t) + 9) // 10)))
-                       AS cid
-            FROM tok
-        ),
-        body AS (
-            SELECT doc_id,
-                   string_agg(
-                       coalesce(
-                           array_to_string(
-                               t[cid * 10 + 1 : cid * 10 + 10], ' '),
-                           ''),
-                       chr(10) ORDER BY cid) AS b
-            FROM ch GROUP BY doc_id
-        ),
-        lined AS (
-            SELECT doc_id,
-                   'hdr banner variant ' || (doc_id % 3) || chr(10) ||
-                   b || chr(10) ||
-                   'footer copyright notice ' || (doc_id % 2) AS text
-            FROM body
-        )"""
-
-
 def _refined_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic hierarchical block refinement over the records view:
     component hierarchy = first name letter -> 4-char name prefix ->
@@ -2866,15 +2374,6 @@ def _suffix_block_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candidate_pairs(keys)
 
 
-def _fs_match_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Estimate-then-apply: fit the FS mixture on the candidate pairs
-    (bounded pattern-count collect), then score every pair with its
-    posterior match probability under the fit."""
-    scored = _pair_scores(spark, sf_dir)
-    fit = fs_em_mod.fit_fs(scored, _FS_FIELDS, tau=0.85, iters=10)
-    return fs_em_mod.fs_match_probability(scored, fit, _FS_FIELDS, tau=0.85)
-
-
 def _media_block_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media-content blocking (the interleaved-payload linkage tier):
     block key = md5 of the media payload, so two records carrying the
@@ -2901,43 +2400,6 @@ def _media_block_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("block_key"),
     )
     return candidate_pairs(keys, dedup=False)
-
-
-def _url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup key over a deterministically derived URL set
-    (the synthetic docs carry no URL column): each doc gets an
-    absolute URL with the messiness the canonicalizer exists to
-    collapse — uppercase scheme/host, ``WWW.``, explicit ``:443``,
-    and one of three tails (tracking params + unsorted query +
-    fragment / the same query clean / no query).  Tails 0 and 1
-    canonicalize to the SAME key, so ``n_same_url`` measurably counts
-    recovered collisions.  Twin builds the identical URL set."""
-    from pyspark.sql.window import Window
-
-    d = _t(spark, sf_dir, "documents").select("doc_id")
-    variant = F.pmod("doc_id", F.lit(3))
-    tail = (
-        F.when(variant == 0, F.lit("/?utm_source=feed&b=2&a=1#top"))
-        .when(variant == 1, F.lit("?a=1&b=2"))
-        .otherwise(F.lit(""))
-    )
-    url = F.concat(
-        F.lit("HTTPS://WWW.Example"),
-        F.pmod("doc_id", F.lit(5)).cast("string"),
-        F.lit(".COM:443/Path/"),
-        F.pmod("doc_id", F.lit(7)).cast("string"),
-        tail,
-    )
-    urls = d.select("doc_id", url.alias("url"))
-    out = urls.select(
-        "doc_id",
-        T.canonical_url(F.col("url")).alias("canonical"),
-        T.url_host(F.col("url")).alias("host"),
-    )
-    return out.withColumn(
-        "n_same_url",
-        F.count("*").over(Window.partitionBy("canonical")).cast("long"),
-    )
 
 
 def _cluster_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3073,21 +2535,6 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-# learned-weights vocabulary for the bow_score_weighted driver entry:
-# an explicit token->weight lookup (stands in for a trained linear
-# filter's coefficients), injected identically into Spark (map
-# literal) and DuckDB (CASE chain)
-_BOW_WEIGHTS = {
-    t: ((i * 37) % 19) - 9
-    for i, t in enumerate(
-        "the of and to in a is that it for as was with be by on not he "
-        "this are or his from at which but have an they you were her "
-        "all she there would their we him been has when who will no "
-        "more if out so said what its about than into them can only".split()
-    )
-}
 
 
 def _span_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3768,33 +3215,6 @@ def oracle_sql() -> dict[str, str]:
         shingle_size=5,
         tokenizer="char",
     )
-    sql["corpus_snapshot_diff"] = """
-        WITH newv AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
-                        ELSE text END AS text
-            FROM documents WHERE doc_id % 11 <> 0
-            UNION ALL
-            SELECT doc_id + 1000000 AS doc_id, text
-            FROM documents WHERE doc_id % 13 = 0
-        ),
-        o AS (SELECT doc_id, md5(text) AS old_fp, 1 AS in_old
-              FROM documents),
-        n AS (SELECT doc_id, md5(text) AS new_fp, 1 AS in_new FROM newv)
-        SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-               CASE WHEN o.in_old IS NULL THEN 'added'
-                    WHEN n.in_new IS NULL THEN 'removed'
-                    WHEN o.old_fp IS DISTINCT FROM n.new_fp
-                        THEN 'changed'
-               END AS status,
-               o.old_fp, n.new_fp
-        FROM o FULL JOIN n ON o.doc_id = n.doc_id
-        WHERE (CASE WHEN o.in_old IS NULL THEN 'added'
-                    WHEN n.in_new IS NULL THEN 'removed'
-                    WHEN o.old_fp IS DISTINCT FROM n.new_fp
-                        THEN 'changed'
-               END) IS NOT NULL
-    """
     sql["dedup_weights"] = f"""
         WITH RECURSIVE np AS (
             {dedup.sql_minhash_near_duplicates("documents", threshold=0.3)}
@@ -3820,26 +3240,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT c.doc_id, c.canonical_id, s.cluster_size,
                round(CAST(1.0 AS DOUBLE) / s.cluster_size, 6) AS weight
         FROM canon c JOIN sizes s USING (canonical_id)
-    """
-    sql["leakage_safe_split"] = f"""
-        WITH RECURSIVE np AS (
-            {dedup.sql_minhash_near_duplicates("documents", threshold=0.3)}
-        ),
-        nodes AS (SELECT doc_id FROM documents),
-        edges AS (
-            SELECT doc_id_1 AS s, doc_id_2 AS d FROM np
-            UNION
-            SELECT doc_id_2 AS s, doc_id_1 AS d FROM np
-        ),
-        reach(a, b) AS (
-            SELECT doc_id, doc_id FROM nodes
-            UNION
-            SELECT r.a, e.d FROM reach r JOIN edges e ON r.b = e.s
-        ),
-        canon AS MATERIALIZED (
-            SELECT a AS doc_id, min(b) AS canonical_id FROM reach GROUP BY a
-        )
-        {corpus.sql_leakage_safe_split("canon")}
     """
     sql["near_dup_keep_list"] = f"""
         WITH RECURSIVE np AS (
@@ -3920,51 +3320,6 @@ def oracle_sql() -> dict[str, str]:
     """
     sql["winnow_near_dups"] = dedup.sql_winnow_near_duplicates(
         "documents", min_shared=2
-    )
-    sql["token_count"] = f"""
-        SELECT doc_id, {T.sql_token_count("text")} AS n_tokens FROM documents
-    """
-    sql["lang_id"] = f"""
-        SELECT doc_id, {T.sql_lang_id("text")} AS lang_pred FROM documents
-    """
-    sql["quality_score"] = f"""
-        SELECT doc_id, {T.sql_quality_score("text")} AS quality FROM documents
-    """
-    sql["corpus_filter"] = corpus.sql_corpus_filter_flags(
-        "documents", min_tokens=20, min_quality=0.3
-    )
-    sql["source_quota_sample"] = corpus.sql_source_quota_sample(
-        "documents", group_col="source", cap=10
-    )
-    sql["vocab_stats"] = corpus.sql_vocab_stats("documents")
-    sql["stratified_sample"] = corpus.sql_stratified_sample(
-        "documents",
-        strata_col="lang",
-        rates={"en": 0.5, "fr": 0.8},
-        default_rate=0.25,
-    )
-    sql["shingle_novelty"] = corpus.sql_shingle_novelty("documents")
-    sql["template_floods"] = corpus.sql_template_floods("documents")
-    sql["mixture_rebalance"] = corpus.sql_mixture_rebalance(
-        "documents",
-        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
-    )
-    sql["mixture_epochs"] = corpus.sql_mixture_epochs(
-        "documents",
-        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
-    )
-    sql["mixture_stats"] = corpus.sql_mixture_stats(
-        "documents",
-        strata_col="lang",
-        rates={"en": 0.5, "fr": 0.8},
-        default_rate=0.25,
-    )
-    sql["token_percentiles"] = corpus.sql_token_percentiles("documents")
-    sql["token_budget_shards"] = corpus.sql_token_budget_shards(
-        "documents", budget=5000
-    )
-    sql["decontaminate"] = corpus.sql_decontaminate(
-        "documents", "doc_id % 37 = 0", min_shared=2
     )
     # jw twin: the missing->0 and identical->1 rules are the kernel's
     # (jw_sim_col); duckdb's builtin returns 0.0 for ''='' so the
@@ -4137,27 +3492,6 @@ def oracle_sql() -> dict[str, str]:
         FROM toks
         WHERE first_tok IS NOT NULL AND first_tok <> ''
     """
-    sql["hashed_bow_score"] = corpus.sql_hashed_bow_score("documents")
-    sql["repetition_signals"] = corpus.sql_repetition_signals("documents")
-    sql["chunk_documents"] = corpus.sql_chunk_documents(
-        "documents", chunk=32, overlap=8
-    )
-    sql["corpus_shuffle"] = corpus.sql_corpus_shuffle(
-        "documents", n_shards=16, seed="r3"
-    )
-    sql["corpus_shuffle_global"] = corpus.sql_corpus_shuffle_global(
-        "documents", seed="r3"
-    )
-    _pii = T.sql_pii_scrub_cols("concat_ws(' ', name, phone, email, address)")
-    sql["pii_scrub"] = f"""
-        WITH {synth_sql_cte()}
-        SELECT doc_id,
-               {_pii["text"]} AS text,
-               {_pii["n_emails"]} AS n_emails,
-               {_pii["n_ips"]} AS n_ips,
-               {_pii["n_phones"]} AS n_phones
-        FROM synth
-    """
     sql["embedding_near_dups"] = ann.sql_embedding_near_duplicates(
         "embeddings", threshold=0.2, nbits=8
     )
@@ -4175,133 +3509,9 @@ def oracle_sql() -> dict[str, str]:
     sql["simhash_near_dups"] = dedup.sql_simhash_near_duplicates(
         "documents", max_hamming=3, n_bands=4
     )
-    sql["windowed_events"] = """
-        SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS window_epoch,
-               event_type,
-               count(*) AS n_events,
-               round(sum(value), 6) AS sum_value
-        FROM events
-        GROUP BY 1, 2
-    """
-    sql["sessionize"] = """
-        WITH gaps AS (
-            SELECT event_id, user_id,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                        THEN 1 ELSE 0 END AS new_sess,
-                   ts
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        )
-        SELECT event_id, user_id,
-               CAST(sum(new_sess) OVER (
-                   PARTITION BY user_id ORDER BY ts
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS BIGINT) AS session_no
-        FROM gaps
-    """
-    # floor(epoch(..)): raw event ts carries microseconds; Spark's
-    # unix_timestamp truncates while DuckDB CAST(double AS BIGINT)
-    # rounds-to-nearest — floor matches the truncation
-    _asof_inner = temporal.sql_asof_join(
-        "SELECT event_id, user_id, ts, value FROM events"
-        " WHERE event_type = 'purchase'",
-        "SELECT user_id, ts, value FROM events WHERE event_type = 'click'",
-        on="user_id",
-        left_cols=("event_id", "user_id", "ts", "value"),
-    )
-    sql["asof_join_events"] = f"""
-        SELECT event_id, user_id,
-               CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch,
-               round(value, 4) AS value,
-               round(value_asof, 4) AS click_value,
-               CAST(floor(epoch(ts_asof)) AS BIGINT) AS click_epoch
-        FROM ({_asof_inner})
-    """
-    _range_inner = temporal.sql_bucketed_range_join(
-        "SELECT event_id AS error_id, user_id, ts AS start_ts,"
-        " ts + INTERVAL 30 MINUTE AS end_ts FROM events"
-        " WHERE event_type = 'error'",
-        "SELECT event_id AS purchase_id, user_id, ts, value FROM events"
-        " WHERE event_type = 'purchase'",
-        on="user_id",
-        interval_cols=("error_id", "user_id", "start_ts", "end_ts"),
-        point_cols=("purchase_id", "user_id", "ts", "value"),
-    )
-    sql["range_join_events"] = f"""
-        SELECT error_id, user_id, purchase_id,
-               CAST(floor(epoch(start_ts)) AS BIGINT) AS start_epoch,
-               CAST(floor(epoch(ts)) AS BIGINT) AS purchase_epoch,
-               round(value, 4) AS value
-        FROM ({_range_inner})
-    """
-    sql["hypertable_rollup"] = temporal.sql_hypertable_rollup("events")
-    sql["gapfill_rollup"] = temporal.sql_gapfill(
-        f"SELECT dim, bucket_epoch, n, total"
-        f" FROM ({temporal.sql_hypertable_rollup('events')})"
-        f" WHERE grain = 'hour'"
-    )
-    sql["unigram_lm_scores"] = corpus.sql_unigram_lm_scores("documents")
-    sql["bigram_lm_scores"] = corpus.sql_bigram_lm_scores("documents")
-    sql["lang_confusion"] = corpus.sql_lang_confusion("documents")
-    sql["pmi_collocations"] = corpus.sql_pmi_collocations(
-        "documents", min_count=20, top_k=50
-    )
-    sql["tfidf_keywords"] = corpus.sql_tfidf_keywords("documents")
-    sql["zipf_slope"] = corpus.sql_zipf_slope("documents")
-    sql["bm25_search"] = corpus.sql_bm25_search("documents", _BM25_TERMS)
-    sql["weighted_sample"] = corpus.sql_weighted_sample(
-        "documents", "n_chars", 40, strata_col="lang"
-    )
-    _scd2_inner = temporal.sql_scd2_history(
-        "SELECT user_id, ts, event_type FROM events",
-        key="user_id",
-        tracked=("event_type",),
-    )
-    sql["scd2_history"] = f"""
-        SELECT user_id, event_type,
-               CAST(floor(epoch(valid_from)) AS BIGINT) AS from_epoch,
-               CAST(floor(epoch(valid_to)) AS BIGINT) AS to_epoch,
-               version
-        FROM ({_scd2_inner})
-    """
-    _latest_inner = temporal.sql_latest_snapshot(
-        "SELECT * FROM events", key="user_id"
-    )
-    sql["latest_events"] = f"""
-        SELECT event_id, user_id,
-               CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch,
-               event_type, round(value, 4) AS value
-        FROM ({_latest_inner})
-    """
     sql["fd_profile"] = sql_profile_dependencies(
         _sql_chain("norm") + " SELECT * FROM norm", _FD_DEPS
     )
-    sql["cube_returns"] = """
-        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-               coalesce(l_linestatus, 'ALL') AS linestatus,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               round(sum(l_quantity), 4) AS sum_qty
-        FROM lineitem
-        GROUP BY CUBE (l_returnflag, l_linestatus)
-    """
-    sql["agg_pushdown_q1"] = """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 4) AS sum_qty,
-               round(sum(l_extendedprice), 4) AS sum_price,
-               round(avg(l_discount), 6) AS avg_disc,
-               count(*) AS n_rows
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY 1, 2
-    """
-    sql["broadcast_join_revenue"] = """
-        SELECT c_mktsegment,
-               round(sum(o_totalprice), 4) AS revenue,
-               count(*) AS n_orders
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY 1
-    """
     # md5-stub feature bytes recomputed directly (multimodal.py stub:
     # feature[i] = digest[i % 16] / 255, emitted as bytes by the query)
     media_bytes = ", ".join(
@@ -4362,16 +3572,6 @@ def oracle_sql() -> dict[str, str]:
     # the SAME recursive-CC oracle as cc_clusters (see
     # _incremental_step's equality argument)
     sql["incremental_linkage_step"] = sql["cc_clusters"]
-    sql["line_dedup"] = corpus.sql_line_dedup("lined", pre_cte=_SQL_LINED)
-    sql["bloom_decontaminate"] = corpus.sql_bloom_decontaminate(
-        "documents", "doc_id % 37 = 0", min_shared=2
-    )
-    sql["fs_em_weights"] = fs_em_mod.sql_estimate_fs_weights(
-        _sql_chain("scored"), _FS_FIELDS, tau=0.85, iters=10
-    )
-    sql["fs_match_probability"] = fs_em_mod.sql_fs_match_probability(
-        _sql_chain("scored"), _FS_FIELDS, tau=0.85, iters=10
-    )
     sql["golden_records"] = f"""
         {_SQL_CC},
         clusters AS (
@@ -4456,7 +3656,6 @@ def oracle_sql() -> dict[str, str]:
         FROM ranked GROUP BY 1, 2
         HAVING count(*) >= 2
     """
-    sql["pprl_dice_scores"] = pprl.sql_bloom_dice(_sql_chain("pairs"))
     _prof_melt = "\n            UNION ALL ".join(
         f"SELECT '{f}' AS field, \"{f}\" AS value FROM norm"
         for f in _PAIR_FIELDS
@@ -4800,9 +3999,6 @@ def oracle_sql() -> dict[str, str]:
                coalesce(w.adamic_adar, CAST(0 AS DOUBLE)) AS adamic_adar
         FROM base b LEFT JOIN wed w USING (doc_id_1, doc_id_2)
     """
-    sql["fs_decisions"] = fs_em_mod.sql_fs_decisions(
-        _sql_chain("scored"), _FS_FIELDS, tau=0.85, iters=10
-    )
     sql["tfidf_pair_scores"] = f"""
         {_sql_chain("pairs")},
         ntoks AS (
@@ -5494,25 +4690,6 @@ def oracle_sql() -> dict[str, str]:
         FROM mkeys a JOIN mkeys b
           ON a.block_key = b.block_key AND a.doc_id < b.doc_id
     """
-    _canon = T.sql_canonical_url("url")
-    sql["url_canonicalize"] = f"""
-        WITH u AS (
-            SELECT doc_id,
-                   'HTTPS://WWW.Example' || (doc_id % 5) ||
-                   '.COM:443/Path/' || (doc_id % 7) ||
-                   CASE (doc_id % 3)
-                        WHEN 0 THEN '/?utm_source=feed&b=2&a=1#top'
-                        WHEN 1 THEN '?a=1&b=2'
-                        ELSE '' END AS url
-            FROM documents
-        )
-        SELECT doc_id,
-               {_canon} AS canonical,
-               {T.sql_url_host("url")} AS host,
-               CAST(count(*) OVER (PARTITION BY {_canon}) AS BIGINT)
-                   AS n_same_url
-        FROM u
-    """
     _cb_art = os.path.join(_ARTIFACT_DIR, "pq_codebook_trained.parquet")
     _cent_art = os.path.join(_ARTIFACT_DIR, "ivf_centroids_trained.parquet")
     sql["ann_recall"] = f"""
@@ -5677,9 +4854,6 @@ def oracle_sql() -> dict[str, str]:
                    AS ivfpq_recall_at5
         FROM s
     """
-    sql["hashed_bow_learned"] = corpus.sql_bow_score_weighted(
-        "documents", _BOW_WEIGHTS
-    )
     sql["media_dedup"] = f"""
         WITH {synth_sql_cte()},
     media AS (

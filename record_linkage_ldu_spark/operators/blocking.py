@@ -1336,9 +1336,11 @@ def blocking_plan(
     ``blocking_recall``.
 
     Output: one row per subset — ``(subset, families, n_families,
-    n_pairs, n_true, recall, meets_target, chosen)``; ``chosen`` marks
-    the cheapest subset meeting the target (or, if none does, the
-    highest-recall one; ties -> fewer pairs, then lower subset id).
+    n_pairs, n_true, total_true, meets_target, chosen)``; recall is
+    ``n_true / total_true``, kept as two exact integers (``total_true``
+    is the same on every row).  ``chosen`` marks the cheapest subset
+    meeting the target (or, if none does, the highest-recall one;
+    ties -> fewer pairs, then lower subset id).
 
     Scale shape: the per-family pair join is the same capped key join
     the candidate stage runs; one (pair -> mask) groupBy; everything
@@ -1456,9 +1458,11 @@ def blocking_plan(
         n_fams.alias("n_families"),
         "n_pairs",
         "n_true",
-        F.round(recall_raw, 6).alias("recall"),
+        "total_true",
         meets.alias("meets_target"),
-        F.when(meets, F.lit(0.0)).otherwise(-recall_raw).alias("_k2"),
+        # total_true is one value for every subset, so n_true DESC
+        # orders the non-meeting rows by recall without a double
+        F.when(meets, F.lit(0)).otherwise(-F.col("n_true")).alias("_k2"),
     )
     w = Window.orderBy(
         F.col("meets_target").desc(),
@@ -1534,27 +1538,25 @@ def sql_blocking_plan(
             SELECT subset,
                    coalesce(sum(CASE WHEN (h.mask & s.subset) <> 0
                                 THEN h.n END), 0) AS n_true,
-                   sum(h.n) AS total_true
+                   CAST(sum(h.n) AS BIGINT) AS total_true
             FROM subsets s CROSS JOIN true_hist h GROUP BY 1
         ),
         scored AS (
             SELECT p.subset,
                    concat_ws(',', {fam_names}) AS families,
                    CAST({n_fams} AS INT) AS n_families,
-                   p.n_pairs, t.n_true,
-                   round(CAST(t.n_true AS DOUBLE) / t.total_true, 6)
-                       AS recall,
+                   p.n_pairs, t.n_true, t.total_true,
                    (CAST(t.n_true AS DOUBLE) / t.total_true
                        >= {float(target_recall)!r}) AS meets_target,
                    CASE WHEN CAST(t.n_true AS DOUBLE) / t.total_true
                              >= {float(target_recall)!r}
-                        THEN 0.0
-                        ELSE -(CAST(t.n_true AS DOUBLE) / t.total_true)
+                        THEN 0
+                        ELSE -t.n_true
                    END AS _k2
             FROM p JOIN t USING (subset)
         )
-        SELECT subset, families, n_families, n_pairs, n_true, recall,
-               meets_target,
+        SELECT subset, families, n_families, n_pairs, n_true,
+               total_true, meets_target,
                (row_number() OVER (
                    ORDER BY meets_target DESC, _k2 ASC,
                             n_pairs ASC, subset ASC) = 1) AS chosen

@@ -1,21 +1,20 @@
-"""Structured-Streaming surface.
+"""Incremental linkage store and its Structured-Streaming surface.
 
 The reference pipeline is batch (SURVEY.md §2.9: no streaming), and
 the engine's resumability comes from stage checkpoints.  This module
-adds the streaming pieces a production deployment bolts on:
+keeps a record store that new documents join without a batch re-run:
 
-  * ``windowed_event_counts`` — watermarked tumbling-window aggregation
-    over an event stream (late data dropped past the watermark).
-  * ``exact_dedup_stream`` — ingest-time exact dedup with BOUNDED
-    state (dropDuplicatesWithinWatermark; fingerprint state evicted
-    past the watermark horizon).
-  * ``sessionize`` — gap-based session ids (batch window-function form;
-    the streaming form would use applyInPandasWithState keyed by user).
-  * ``incremental_linkage`` — foreachBatch micro-batch linkage: each
-    new-document batch is normalized, blocked against the existing
-    record store and scored; its matches are appended to the edge
-    store, and connected components re-runs over every stored edge to
-    rewrite the cluster table.
+  * ``incremental_linkage_batch`` — one micro-batch: the new documents
+    are normalized, blocked against the stored records through the
+    same tier stack as batch linkage, scored and ruled; matches are
+    appended to the edge store and the cluster table is rewritten.
+  * ``stream_documents_to_clusters`` — the same step driven by
+    ``foreachBatch`` over a document stream.
+  * ``delete_documents`` / ``compact_store`` / ``recover_store`` /
+    ``store_stats`` — tombstoned deletes, file compaction, roll-back
+    of a half-committed batch and an operational snapshot.
+  * ``incremental_dedup_batch`` — the MinHash ingest near-duplicate
+    guard over its own band store.
 """
 
 from __future__ import annotations
@@ -25,171 +24,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-    streaming: bool = False,
-) -> DataFrame:
-    """Tumbling-window counts/sums per event_type.  Works identically
-    on a batch frame or a readStream frame; the watermark only binds
-    in streaming mode."""
-    src = events.withWatermark("ts", watermark) if streaming else events
-    return (
-        src.groupBy(
-            F.window("ts", window_duration).alias("w"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def exact_dedup_stream(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    streaming: bool = True,
-) -> DataFrame:
-    """Streaming exact dedup: keep the first document per content
-    fingerprint, dropping re-arrivals within the watermark horizon —
-    the streaming sibling of ``operators.dedup.exact_duplicates``.
-
-    State is BOUNDED by construction: ``dropDuplicatesWithinWatermark``
-    evicts a fingerprint once the watermark passes its event time, so
-    the dedup map never grows with the full corpus (a bare streaming
-    ``dropDuplicates`` keeps every key forever — the unbounded-state
-    anti-pattern this exists to avoid).  The documented trade: a
-    duplicate arriving AFTER its original's state was evicted is
-    re-admitted.  Corpus-wide retro dedup is the batch family's job
-    (exact/minhash/winnow keep lists); this operator is the ingest-
-    time guard in front of it.
-
-    Batch mode (``streaming=False``) degrades to keep-min-``ts`` per
-    fingerprint for test comparison.
-    """
-    from ..functions.text import doc_fingerprint
-
-    fp = docs.withColumn("fingerprint", doc_fingerprint(F.col(text_col)))
-    if streaming:
-        return fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            ["fingerprint"]
-        )
-    w = Window.partitionBy("fingerprint").orderBy(ts_col, id_col)
-    return (
-        fp.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Gap-based sessionization: a new session starts when a user's
-    inter-event gap exceeds ``gap_minutes``.  Session id = first event
-    ts in the session (per user)."""
-    w = Window.partitionBy("user_id").orderBy("ts")
-    # epoch seconds with sub-second fraction (matches DuckDB's epoch())
-    # so boundary gaps classify identically in engine and oracle;
-    # the timestamp->timestamp_ltz hop handles TIMESTAMP_NTZ parquet
-    # columns (session TZ is pinned to UTC)
-    epoch = F.col("ts").cast("timestamp").cast("double")
-    gap = epoch - F.lag(epoch).over(w)
-    new_sess = (gap.isNull() | (gap > gap_minutes * 60)).cast("long")
-    sess_no = F.sum(new_sess).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return events.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        sess_no.alias("session_no"),
-    )
-
-
-def sessionize_stream(
-    events_stream: DataFrame, gap_minutes: int = 30
-) -> DataFrame:
-    """Streaming twin of ``sessionize``: gap-based session numbers as a
-    custom STATEFUL operator via ``applyInPandasWithState`` keyed by
-    user.
-
-    Per-user state = (last event epoch, current session_no); each
-    micro-batch sorts its slice by ts, continues the numbering from
-    state, and persists the tail for the next batch — so sessions that
-    span micro-batch boundaries get the SAME numbering the batch
-    window-function form assigns on the full history (asserted by
-    tests/test_incremental.py against ``sessionize``).  Events must
-    reach their key in event-time order across batches (file-ordered
-    replay or an upstream watermark+sort); out-of-order arrivals
-    within one batch are handled by concatenating ALL of the key's
-    Arrow chunks and sorting once — applyInPandasWithState delivers a
-    key's batch as an iterator of chunks (split at
-    arrow.maxRecordsPerBatch, default 10k) with no ts ordering ACROSS
-    chunks, so a per-chunk sort would misnumber any key with more
-    events than one chunk in a single micro-batch.  The concat bounds
-    memory at one key's events per micro-batch — the same bound the
-    batch window form's per-key partition already implies.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, session_no bigint"
-    )
-    state_schema = "last_epoch double, session_no bigint"
-    gap_s = float(gap_minutes) * 60.0
-
-    def assign(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        last_epoch, sess_no = (
-            state.get if state.exists else (None, 0)
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                "ts", kind="mergesort"
-            )
-            epochs = (
-                pd.to_datetime(pdf["ts"]).astype("int64") / 1e9
-            ).to_numpy()
-            nums = []
-            for e in epochs:
-                if last_epoch is None or (e - last_epoch) > gap_s:
-                    sess_no += 1
-                nums.append(sess_no)
-                last_epoch = float(e)
-            out = pdf[["event_id", "user_id", "ts", "event_type"]].copy()
-            out["session_no"] = nums
-            yield out
-        state.update((last_epoch, int(sess_no)))
-
-    return (
-        events_stream.select("event_id", "user_id", "ts", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            assign,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 BATCH_MANIFEST = "_batch_manifest.json"
 _STORE_APPEND_TABLES = (
@@ -1053,55 +887,6 @@ def compact_store(
             "rows": n,
         }
     return stats
-
-
-def hypertable_rollup_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    dim_col: str = "event_type",
-    value_col: str = "value",
-    fine: str = "1 hour",
-    watermark: str = "2 hours",
-    streaming: bool = True,
-) -> DataFrame:
-    """Streaming maintenance of the continuous aggregate's fine grain
-    (the stored hourly partial table `operators.temporal.
-    hypertable_rollup` re-aggregates): a watermarked tumbling-window
-    count/sum/min/max per dim, append-mode once the watermark closes a
-    window.  Day-grain queries run `temporal.rollup_from_partials`
-    against the SINK of this stream — raw events are aggregated
-    exactly once, at ingest, in both the batch and streaming worlds
-    (the TimescaleDB continuous-aggregate refresh loop, expressed as
-    Structured Streaming).
-
-    State is bounded by the watermark horizon: one window per
-    (open hour, dim).  Emits the same partial-column schema as the
-    batch fine grain (`_bucket`/dim/n/total/vmin/vmax), so the two
-    paths are interchangeable downstream — pytest pins streamed
-    partials == batch partials and streamed-then-reaggregated ==
-    batch day grain.
-    """
-    src = events.withWatermark(ts_col, watermark) if streaming else events
-    return (
-        src.groupBy(
-            F.window(ts_col, fine).alias("_w"),
-            F.col(dim_col).alias("dim"),
-        )
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum(value_col).alias("total"),
-            F.min(value_col).alias("vmin"),
-            F.max(value_col).alias("vmax"),
-        )
-        .select(
-            F.col("_w.start").alias("_bucket"),
-            "dim",
-            "n",
-            "total",
-            "vmin",
-            "vmax",
-        )
-    )
 
 
 def store_stats(spark, store_dir: str) -> dict:

@@ -520,8 +520,7 @@ def test_blocking_plan_exact_union_and_choice(spark):
     # union: 3 distinct pairs, not 4 — the overlap is counted once
     assert rows["aa,bb"]["n_pairs"] == 3 and rows["aa,bb"]["n_true"] == 3
     # denominator includes the unreachable (d7,d8): 3/4, never 3/3
-    assert rows["aa,bb"]["recall"] == 0.75
-    assert rows["aa"]["recall"] == 0.5
+    assert all(r["total_true"] == 4 for r in rows.values())
     # aa and bb both meet 0.5 at cost 2; tie breaks to lower subset id
     assert rows["aa"]["chosen"] is True
     assert rows["bb"]["chosen"] is False
@@ -529,22 +528,36 @@ def test_blocking_plan_exact_union_and_choice(spark):
 
 
 def test_blocking_plan_falls_back_to_max_recall(spark):
-    """If no subset meets the target, chosen = highest recall."""
+    """If no subset meets the target, chosen = highest recall (most
+    true pairs reached), even when a cheaper subset exists; ties ->
+    fewer pairs, then lower subset id."""
     from record_linkage_ldu_spark.operators.blocking import blocking_plan
 
+    # aa blocks {d1,d2}: 1 pair, 1 true; bb blocks {d1,d2,d3}: 3 pairs,
+    # 2 true; (d7,d8) is reached by nothing
     keys = spark.createDataFrame(
-        [("d1", "aa:x"), ("d2", "aa:x")], "doc_id string, block_key string"
+        [("d1", "aa:x"), ("d2", "aa:x"),
+         ("d1", "bb:y"), ("d2", "bb:y"), ("d3", "bb:y")],
+        "doc_id string, block_key string",
     )
     labeled = spark.createDataFrame(
-        [("d1", "d2", True), ("d7", "d8", True)],
+        [("d1", "d2", True), ("d2", "d3", True), ("d7", "d8", True)],
         "doc_id_1 string, doc_id_2 string, is_match boolean",
     )
-    out = blocking_plan(
-        keys, labeled, families=("aa",), target_recall=0.99
-    ).collect()
-    assert len(out) == 1
-    assert out[0]["meets_target"] is False
-    assert out[0]["chosen"] is True
+    rows = {
+        r["families"]: r
+        for r in blocking_plan(
+            keys, labeled, families=("aa", "bb"), target_recall=0.99
+        ).collect()
+    }
+    assert not any(r["meets_target"] for r in rows.values())
+    assert all(r["total_true"] == 3 for r in rows.values())
+    assert (rows["aa"]["n_pairs"], rows["aa"]["n_true"]) == (1, 1)
+    assert (rows["bb"]["n_pairs"], rows["bb"]["n_true"]) == (3, 2)
+    assert (rows["aa,bb"]["n_pairs"], rows["aa,bb"]["n_true"]) == (3, 2)
+    assert rows["bb"]["chosen"] is True
+    assert rows["aa"]["chosen"] is False
+    assert rows["aa,bb"]["chosen"] is False
 
 
 def test_capture_recapture_chapman_arithmetic(spark):
@@ -626,7 +639,8 @@ def test_blocking_plan_empty_inputs_keep_subset_rows(spark):
     )
     rows = blocking_plan(keys, no_true, families=("aa", "bb")).collect()
     assert len(rows) == 3
-    assert all(r["n_true"] == 0 and r["recall"] == 0.0 for r in rows)
+    assert all(r["n_true"] == 0 and r["total_true"] == 0 for r in rows)
+    assert not any(r["meets_target"] for r in rows)
     assert sum(r["chosen"] for r in rows) == 1
     # no candidate pairs at all: still 2^k - 1 rows
     lonely = spark.createDataFrame(

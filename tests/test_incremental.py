@@ -107,298 +107,6 @@ def test_streaming_wrapper_available_now(spark, tmp_path):
     assert got == _cluster_set(full.clusters)
 
 
-def test_sessionize_stream_matches_batch(spark, tmp_path):
-    """The applyInPandasWithState sessionizer must assign the SAME
-    session numbers as the batch window-function form even when a
-    user's session spans micro-batch boundaries (state carries the
-    last event epoch + session counter across batches)."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from record_linkage_ldu_spark.streaming.incremental import (
-        sessionize,
-        sessionize_stream,
-    )
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    cut = events.agg(
-        F.expr("percentile(cast(cast(ts as timestamp) as double), 0.5)").alias("m")
-    ).collect()[0]["m"]
-
-    stream_dir = tmp_path / "stream_in"
-    stream_dir.mkdir()
-    for i, half in enumerate(
-        (
-            events.where(F.col("ts").cast("timestamp").cast("double") <= cut),
-            events.where(F.col("ts").cast("timestamp").cast("double") > cut),
-        )
-    ):
-        stage = tmp_path / f"stage{i}"
-        half.coalesce(1).write.parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        dst = stream_dir / f"batch{i}.parquet"
-        shutil.copy(part, dst)
-        # file source replays in modification-time order
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-    )
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sess_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["event_id"], r["session_no"])
-        for r in spark.table("sess_stream_out").collect()
-    }
-    expected = {
-        (r["event_id"], r["session_no"])
-        for r in sessionize(events, gap_minutes=30).collect()
-    }
-    assert len(got) == events.count()
-    assert got == expected
-
-
-def test_sessionize_stream_multi_chunk_key(spark, tmp_path):
-    """A key whose micro-batch slice exceeds one Arrow chunk:
-    applyInPandasWithState hands the slice over as MULTIPLE pandas
-    chunks with no ts ordering ACROSS them, so the sessionizer must
-    concat-then-sort (a per-chunk sort misnumbers sessions).  Shrink
-    the chunk size to 50 and feed one user 600 out-of-order events in
-    a single micro-batch."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from record_linkage_ldu_spark.streaming.incremental import (
-        sessionize,
-        sessionize_stream,
-    )
-
-    # 600 events, 10 sessions of 60 events each (1-min spacing inside,
-    # 2h gaps between), written in REVERSE ts order so chunk order is
-    # maximally wrong.
-    rows = []
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    eid = 0
-    for sess in range(10):
-        for k in range(60):
-            rows.append(
-                (
-                    eid,
-                    7,
-                    base + pd.Timedelta(hours=3 * sess, minutes=k),
-                    "click",
-                )
-            )
-            eid += 1
-    rows.reverse()
-    pdf = pd.DataFrame(
-        rows, columns=["event_id", "user_id", "ts", "event_type"]
-    )
-    events = spark.createDataFrame(pdf)
-    stream_dir = tmp_path / "mc_in"
-    stream_dir.mkdir()
-    events.coalesce(1).write.parquet(str(tmp_path / "mc_stage"))
-    import glob
-    import shutil
-
-    shutil.copy(
-        glob.glob(str(tmp_path / "mc_stage" / "part-*.parquet"))[0],
-        stream_dir / "batch0.parquet",
-    )
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "50")
-    try:
-        stream = spark.readStream.schema(events.schema).parquet(str(stream_dir))
-        q = (
-            sessionize_stream(stream, gap_minutes=30)
-            .writeStream.format("memory")
-            .queryName("sess_mc_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "mc_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    got = {
-        (r["event_id"], r["session_no"])
-        for r in spark.table("sess_mc_out").collect()
-    }
-    expected = {
-        (r["event_id"], r["session_no"])
-        for r in sessionize(events, gap_minutes=30).collect()
-    }
-    assert len(got) == 600
-    assert got == expected
-
-
-def test_exact_dedup_stream_bounded_state(spark, tmp_path):
-    """Streaming exact dedup via dropDuplicatesWithinWatermark: a
-    duplicate arriving within the watermark horizon is dropped; after
-    its original's state is evicted it is re-admitted (the documented
-    bounded-state trade)."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-
-    from record_linkage_ldu_spark.streaming.incremental import (
-        exact_dedup_stream,
-    )
-
-    def doc(did, hour, minute, text):
-        return (did, text, dt.datetime(2024, 1, 1, hour, minute))
-
-    schema = "doc_id bigint, text string, ts timestamp"
-    batches = [
-        # originals
-        [doc(1, 10, 0, "alpha text"), doc(2, 10, 5, "beta text")],
-        # duplicate of doc 1 inside the 1h horizon -> dropped
-        [doc(3, 10, 10, "alpha text")],
-        # advances the watermark far past 11:00 -> alpha state evicted
-        [doc(4, 20, 0, "gamma text")],
-        # spacer: eviction applies at the end of the first batch that
-        # sees the advanced watermark
-        [doc(6, 20, 15, "delta text")],
-        # duplicate of doc 1 AFTER eviction -> re-admitted
-        [doc(5, 20, 30, "alpha text")],
-    ]
-    stream_dir = tmp_path / "docs_stream"
-    stream_dir.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"dstage{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        dst = stream_dir / f"b{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-    )
-    q = (
-        exact_dedup_stream(stream, watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {r["doc_id"] for r in spark.table("dedup_stream_out").collect()}
-    assert got == {1, 2, 4, 5, 6}
-
-    # batch mode keeps exactly the min-ts row per fingerprint
-    all_rows = [r for b in batches for r in b]
-    batch = exact_dedup_stream(
-        spark.createDataFrame(all_rows, schema), streaming=False
-    )
-    assert {r["doc_id"] for r in batch.collect()} == {1, 2, 4, 6}
-
-
-def test_windowed_events_watermark_drops_late_data(spark, tmp_path):
-    """Streaming mode of windowed_event_counts: an event arriving
-    after the watermark has passed its window is DROPPED; the window's
-    appended result excludes it."""
-    import datetime as dt
-    import glob
-    import os
-    import shutil
-
-    from record_linkage_ldu_spark.streaming.incremental import (
-        windowed_event_counts,
-    )
-
-    def ev(eid, hour, minute):
-        return (
-            eid,
-            dt.datetime(2024, 1, 1, hour, minute),
-            1,
-            "click",
-            1.0,
-            "{}",
-        )
-
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    batches = [
-        # window [10:00, 11:00): two events; max ts 11:15
-        [ev(1, 10, 0), ev(2, 10, 30), ev(3, 11, 15)],
-        # advances the watermark to 18:00 (2h behind 20:00)
-        [ev(4, 20, 0)],
-        # spacer: watermark updates propagate with a one-batch lag,
-        # and window-state eviction happens at the END of the first
-        # batch that sees the advanced watermark — a late row landing
-        # in that same batch would still merge (watermark is a lower
-        # bound, per the Structured Streaming contract)
-        [ev(6, 20, 30)],
-        # late arrival for the now-evicted 10:00 window -> dropped
-        [ev(5, 10, 45)],
-    ]
-    stream_dir = tmp_path / "events_stream"
-    stream_dir.mkdir()
-    for i, rows in enumerate(batches):
-        stage = tmp_path / f"estage{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        dst = stream_dir / f"b{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stream_dir))
-    )
-    q = (
-        windowed_event_counts(
-            stream, window_duration="1 hour", watermark="2 hours",
-            streaming=True,
-        )
-        .writeStream.format("memory")
-        .queryName("win_stream_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {
-        (r["window_start"].hour, r["n_events"])
-        for r in spark.table("win_stream_out").collect()
-    }
-    # the 10:00 window closed with 2 events — the late 10:45 event
-    # (event_id 5) arrived after the watermark passed and is not
-    # counted; the 11:00 window holds event 3
-    assert (10, 2) in got
-    assert (10, 3) not in got
-    assert (11, 1) in got
-
-
 def test_crash_mid_commit_rolls_back_and_replays(spark, tmp_path, monkeypatch):
     """ADVICE r3 (medium): a crash between the records append and the
     keys/edges appends used to leave docs permanently unlinkable.  The
@@ -1023,15 +731,26 @@ def test_incremental_counters_equal_store_recount(spark, tmp_path):
 _JOB_CEILING = 76
 
 
-def test_incremental_batch_job_ceiling(spark, tmp_path):
+def test_incremental_batch_job_ceiling(spark, tmp_path, monkeypatch):
     """One small micro-batch into a seeded store stays under a Spark
     job ceiling: the scoring plan runs once (pinned) and the returned
-    counters never re-read the store."""
+    counters never re-read the store.  The batch also hands its
+    new-keys side to the tier stack as the broadcast side."""
+    from record_linkage_ldu_spark.operators import blocking
+
     docs = _docs(spark).localCheckpoint(eager=True)
     first = F.substring("doc_id", 1, 1)
     store = str(tmp_path / "store")
     incremental_linkage_batch(spark, docs.where(first != "c"), store)
     batch = docs.where(first == "c").localCheckpoint(eager=True)
+    tier_calls = []
+    tiered_pairs = blocking.tiered_pairs
+
+    def recording_tiered_pairs(*args, **kwargs):
+        tier_calls.append(kwargs)
+        return tiered_pairs(*args, **kwargs)
+
+    monkeypatch.setattr(blocking, "tiered_pairs", recording_tiered_pairs)
     sc = spark.sparkContext
     group = f"job-ceiling-{id(tmp_path)}"
     sc.setJobGroup(group, "one incremental micro-batch")
@@ -1043,3 +762,7 @@ def test_incremental_batch_job_ceiling(spark, tmp_path):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert stats["new_docs"] == 30
     assert jobs <= _JOB_CEILING, jobs
+    assert tier_calls, "the batch never reached blocking.tiered_pairs"
+    assert all(kw.get("broadcast_left") is True for kw in tier_calls), (
+        tier_calls
+    )

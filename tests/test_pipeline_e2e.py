@@ -425,3 +425,18 @@ def test_unicode_names_knob_links_cjk_duplicates(spark):
     assert ("d1", "d2") in uni                  # blocked + scored + linked
     assert ("d4", "d5") in uni                  # Latin path unaffected
     assert not any("d3" in p for p in uni)      # distinct CJK stays single
+
+
+def test_driver_registry_has_no_orphan_twins():
+    """Every DuckDB twin belongs to a registered query, and only the
+    three pytest-gated entries run without one.  Builds the two
+    registries only; no Spark job runs."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as E
+
+    q, o = set(E.queries()), set(E.oracle_sql())
+    assert o <= q, sorted(o - q)
+    assert q - o == {"ivf_ann_topk", "ro_jw_pair_scores", "span_invariant_check"}

@@ -300,62 +300,6 @@ def test_group_linkage_hand_computed(spark):
     assert ("A", "A") not in out  # intra-group pair excluded
 
 
-
-def test_pprl_bloom_dice_semantics(spark):
-    """CLK + Dice: identical names score 1.0, a one-char typo scores
-    high (most bigrams shared), an unrelated name scores low, an
-    empty side scores 0.0; encodings are deterministic."""
-    from record_linkage_ldu_spark.operators.pprl import (
-        bloom_encode,
-        dice_pairs,
-    )
-
-    records = spark.createDataFrame(
-        [("d1", "alice smith"), ("d2", "alice smith"),
-         ("d3", "alice smyth"), ("d4", "zzqq vvrr"), ("d5", "")],
-        "doc_id string, name string",
-    )
-    enc = bloom_encode(records, "name")
-    by_doc = {}
-    for r in enc.collect():
-        by_doc.setdefault(r["doc_id"], set()).add(r["pos"])
-    assert by_doc["d1"] == by_doc["d2"]      # deterministic encoding
-    assert "d5" not in by_doc                # empty field -> no rows
-    assert all(0 <= p < 256 for p in by_doc["d1"])
-
-    pairs = spark.createDataFrame(
-        [("d1", "d2"), ("d1", "d3"), ("d1", "d4"), ("d1", "d5")],
-        "doc_id_1 string, doc_id_2 string",
-    )
-    out = {
-        (r["doc_id_1"], r["doc_id_2"]): r["dice"]
-        for r in dice_pairs(enc, pairs).collect()
-    }
-    assert out[("d1", "d2")] == 1.0
-    assert out[("d1", "d3")] > 0.7           # one-char typo stays close
-    assert out[("d1", "d4")] < 0.3           # unrelated name is far
-    assert out[("d1", "d5")] == 0.0          # un-encodable side
-    # exact dice for the typo pair from the encodings themselves
-    a, b = by_doc["d1"], by_doc["d3"]
-    assert out[("d1", "d3")] == round(2 * len(a & b) / (len(a) + len(b)), 6)
-
-
-def test_pprl_bloom_encode_short_field_large_q(spark):
-    """q=4 on a field shorter than q-1 must produce NO encoding —
-    regression for sequence(1, N<1) yielding a descending [1, 0] and
-    spurious grams where the DuckDB twin's range() is empty."""
-    from record_linkage_ldu_spark.operators.pprl import bloom_encode
-
-    records = spark.createDataFrame(
-        [("d1", "a"), ("d2", "ab"), ("d3", "abcdef")],
-        "doc_id string, name string",
-    )
-    enc = {r["doc_id"] for r in bloom_encode(records, "name", q=4).collect()}
-    assert "d1" not in enc   # padded '#a$' (len 3) < q: no grams
-    assert "d2" in enc       # padded '#ab$' (len 4) == q: one gram
-    assert "d3" in enc
-
-
 def test_one_to_one_assignment_hand_computed(spark):
     """Mutual-best semantics on a hand-built bipartite score set:
     survivors are exactly the pairs where both endpoints nominate each

@@ -2,6 +2,8 @@
 (kind, text, media_ref, order) of every document survives the pipeline
 unchanged — derived fields live in new columns only."""
 
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from record_linkage_ldu_spark.operators.spans import (
@@ -110,3 +112,32 @@ def test_benford_profile_hand_computed(spark):
     empty_rows = benford_profile(df3, ("v",)).collect()
     assert all(r["n"] == 0 for r in empty_rows)
     assert all(r["share"] is None and r["tvd"] is None for r in empty_rows)
+
+
+def test_profile_dependencies(spark):
+    from record_linkage_ldu_spark.operators.spans import profile_dependencies
+
+    rec = spark.createDataFrame(
+        [
+            Row(zip="1000", city="a", state="x"),
+            Row(zip="1000", city="a", state="x"),
+            Row(zip="2000", city="b", state="x"),
+            Row(zip="2000", city="c", state="x"),   # zip->city violated
+            Row(zip="2000", city="c", state="x"),
+            Row(zip="", city="d", state="y"),       # empty lhs excluded
+            Row(zip="3000", city=None, state="y"),  # null rhs excluded
+        ]
+    )
+    out = {
+        r["dep"]: r
+        for r in profile_dependencies(
+            rec, (("zip", "city"), ("city", "state"))
+        ).collect()
+    }
+    zc = out["zip->city"]
+    assert (zc["n_rows"], zc["n_groups"], zc["n_violating_groups"]) == (5, 2, 1)
+    # g3: keep max-consensus per group -> 2 (zip=1000) + 2 (city=c) of 5
+    assert zc["g3_strength"] == pytest.approx(4 / 5)
+    assert not zc["holds"]
+    cs = out["city->state"]
+    assert cs["holds"] and cs["g3_strength"] == 1.0

@@ -20,7 +20,7 @@ store and a mismatched re-run is refused, and per-batch work is
 O(batch): the store-side probe is pruned to the band keys the batch
 touches.  Downstream consumers read <store>/flags
 (doc_id, duplicate_of, jaccard, via) to exclude or reroute
-duplicates before the corpus pipeline.
+duplicates before linkage.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """spark-submit entry point for INCREMENTAL linkage — the growing-
-corpus deployment mode (streaming/incremental.py), completing the
-run_linkage.py / run_corpus.py job family.
+corpus deployment mode (streaming/incremental.py), the streaming
+sibling of run_linkage.py.
 
 Two modes over the same persistent store:
 
