@@ -707,8 +707,8 @@ def value_specific_odds(
     layer) weights every agreement on a field equally — this is the
     classical refinement on top.
 
-    No ``log``/``pow`` anywhere (libm results differ across engines —
-    same convention as fs_em): odds ratios, not log-weights.  The
+    No ``log``/``pow`` anywhere (libm results differ across
+    engines): odds ratios, not log-weights.  The
     chance-agreement sum is computed in EXACT integer arithmetic
     (sum of squared counts as decimal(38,0)) before ONE division, so
     the result is order-independent — a plain double sum over the
