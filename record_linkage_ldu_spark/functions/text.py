@@ -1,5 +1,5 @@
-"""Text functions for the dedup and blocking families: tokens,
-word shingles, character n-grams, content and winnowing fingerprints.
+"""Text-analysis functions for large-scale training-data pipelines:
+language ID, quality scoring, token counting, fingerprinting.
 
 All native Column chains (whole-stage codegen); each has a DuckDB SQL
 twin for the driver oracle.  These operate on the flat corpus shape
@@ -11,6 +11,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# tiny frozen stopword sets per language for the n-gram/stopword-vote
+# language heuristic (public common-word lists)
+LANG_MARKERS: dict[str, tuple[str, ...]] = {
+    "en": ("the", "and", "of", "to", "in", "is", "that", "for", "with", "a"),
+    "fr": ("le", "la", "et", "les", "des", "en", "un", "une", "du", "est"),
+    "de": ("der", "die", "und", "das", "ist", "nicht", "mit", "ein", "zu", "den"),
+    "es": ("el", "la", "los", "las", "es", "una", "por", "con", "para", "del"),
+}
 
 
 def tokens(c: Column) -> Column:
@@ -130,6 +139,219 @@ def sql_shingles(expr: str, w: int = 3) -> str:
     )
 
 
+def token_count(c: Column) -> Column:
+    return F.size(tokens(c)).cast("long")
+
+
+def sql_token_count(expr: str) -> str:
+    return f"CAST(len({sql_tokens(expr)}) AS BIGINT)"
+
+
+def _lang_hits(toks: Column, lang: str) -> Column:
+    markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
+    return F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
+
+
+def lang_id(c: Column) -> Column:
+    """Stopword-vote language heuristic: language with the most marker
+    hits; ties and zero hits -> 'und' (deterministic order en,fr,de,es).
+    """
+    toks = tokens(c)
+    hits = {lang: _lang_hits(toks, lang) for lang in LANG_MARKERS}
+    best = F.greatest(*hits.values())
+    expr = F.lit("und")
+    # reversed so earlier languages win ties (en highest priority)
+    for lang in reversed(list(LANG_MARKERS)):
+        expr = F.when((hits[lang] > 0) & (hits[lang] == best), F.lit(lang)).otherwise(
+            expr
+        )
+    return expr
+
+
+def sql_lang_id(expr: str) -> str:
+    toks = sql_tokens(expr)
+    hit = {
+        lang: (
+            f"len(list_filter({toks}, t -> list_contains("
+            + "["
+            + ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
+            + "], t)))"
+        )
+        for lang in LANG_MARKERS
+    }
+    best = "greatest(" + ", ".join(hit.values()) + ")"
+    out = "'und'"
+    for lang in reversed(list(LANG_MARKERS)):
+        out = (
+            f"CASE WHEN {hit[lang]} > 0 AND {hit[lang]} = {best} "
+            f"THEN '{lang}' ELSE {out} END"
+        )
+    return out
+
+
+def quality_score(c: Column) -> Column:
+    """Heuristic document quality in [0,1]: length band + alpha ratio +
+    mean-token-length band + English stopword presence.  Weights are
+    fixed and documented; intended for corpus filtering, not ranking.
+    """
+    n_chars = F.length(c).cast("double")
+    toks = tokens(c)
+    n_toks = F.size(toks).cast("double")
+    alpha = F.length(F.regexp_replace(F.lower(c), "[^a-z ]", "")).cast("double")
+    alpha_ratio = F.when(n_chars > 0, alpha / n_chars).otherwise(F.lit(0.0))
+    mean_tok = F.when(n_toks > 0, n_chars / n_toks).otherwise(F.lit(0.0))
+    sw_hits = _lang_hits(toks, "en").cast("double")
+    sw_ratio = F.when(n_toks > 0, sw_hits / n_toks).otherwise(F.lit(0.0))
+    score = (
+        F.when((n_chars >= 100) & (n_chars <= 20000), F.lit(0.25)).otherwise(F.lit(0.0))
+        + F.lit(0.25) * alpha_ratio
+        + F.when((mean_tok >= 3.0) & (mean_tok <= 12.0), F.lit(0.25)).otherwise(
+            F.lit(0.0)
+        )
+        + F.lit(0.25) * F.least(F.lit(1.0), sw_ratio * 4)
+    )
+    return F.round(score, 6)
+
+
+def sql_quality_score(expr: str) -> str:
+    toks = sql_tokens(expr)
+    en = ", ".join(f"'{w}'" for w in LANG_MARKERS["en"])
+    n_chars = f"CAST(length({expr}) AS DOUBLE)"
+    n_toks = f"CAST(len({toks}) AS DOUBLE)"
+    alpha = f"CAST(length(regexp_replace(lower({expr}), '[^a-z ]', '', 'g')) AS DOUBLE)"
+    alpha_ratio = f"(CASE WHEN {n_chars} > 0 THEN {alpha} / {n_chars} ELSE 0.0 END)"
+    mean_tok = f"(CASE WHEN {n_toks} > 0 THEN {n_chars} / {n_toks} ELSE 0.0 END)"
+    sw_hits = f"CAST(len(list_filter({toks}, t -> list_contains([{en}], t))) AS DOUBLE)"
+    sw_ratio = f"(CASE WHEN {n_toks} > 0 THEN {sw_hits} / {n_toks} ELSE 0.0 END)"
+    return (
+        "round("
+        f"(CASE WHEN {n_chars} >= 100 AND {n_chars} <= 20000 THEN 0.25 ELSE 0.0 END)"
+        f" + 0.25 * {alpha_ratio}"
+        f" + (CASE WHEN {mean_tok} >= 3.0 AND {mean_tok} <= 12.0 THEN 0.25 ELSE 0.0 END)"
+        f" + 0.25 * least(1.0, {sw_ratio} * 4)"
+        ", 6)"
+    )
+
+
+def ngrams_of_tokens(toks: Column, n: int) -> Column:
+    """All (overlapping, order-preserving) word n-grams of a token
+    array — NOT distinct, unlike ``shingles_of_tokens``: repetition
+    statistics need the multiset.  Docs shorter than ``n`` tokens
+    yield an empty array.
+
+    Pass an *attribute* (materialized column) in hot paths — ``toks``
+    is referenced inside a per-element lambda (see
+    ``shingles_of_tokens``)."""
+    if n <= 1:
+        return toks
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.concat_ws(
+                " ", *[F.try_element_at(toks, i + j + 1) for j in range(n)]
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def sql_ngrams(toks_expr: str, n: int) -> str:
+    if n <= 1:
+        return toks_expr
+    joined = " || ' ' || ".join(f"({toks_expr})[i+{j}]" for j in range(n))
+    return (
+        f"(CASE WHEN len({toks_expr}) >= {n} "
+        f"THEN [ {joined} for i in range(1, len({toks_expr}) - {n - 2}) ] "
+        f"ELSE [] END)"
+    )
+
+
+def max_run_count(arr: Column) -> Column:
+    """Highest multiplicity of any element in a string array, computed
+    row-locally in O(n log n): sort, then one linear fold counting the
+    longest equal run (struct-state ``aggregate`` — whole-stage
+    codegen, no shuffle, no O(n^2) per-element rescan)."""
+    srt = F.array_sort(arr)
+
+    def merge(acc: Column, x: Column) -> Column:
+        run = (
+            F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
+        )
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            F.greatest(acc["best"], run).alias("best"),
+        )
+
+    return F.aggregate(
+        srt,
+        F.struct(
+            F.lit(None).cast("string").alias("prev"),
+            F.lit(0).alias("run"),
+            F.lit(0).alias("best"),
+        ),
+        merge,
+        lambda acc: acc["best"],
+    )
+
+
+def sql_max_run_count(arr_expr: str) -> str:
+    """DuckDB twin of ``max_run_count``.  The oracle runs at test
+    scale, so the O(n^2) distinct-rescan comprehension is fine."""
+    return (
+        f"(CASE WHEN len({arr_expr}) = 0 THEN 0 ELSE "
+        f"list_max(list_transform(list_distinct({arr_expr}), "
+        f"x -> len(list_filter({arr_expr}, y -> y = x)))) END)"
+    )
+
+
+# PII patterns: character classes + bounded quantifiers only — no
+# lookaround/backrefs, so Java regex (Spark) and RE2 (DuckDB) agree.
+# Scrub order matters: emails first (their local parts contain digit
+# runs), then IPs (dotted digit runs would otherwise be eaten by the
+# looser phone pattern), then phones.
+PII_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+PII_IP_RE = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
+PII_PHONE_RE = "[+(]?\\d[\\d().\\s-]{6,}\\d"
+
+
+def pii_scrub(c: Column) -> Column:
+    """Mask PII spans in free text with typed placeholders — the
+    redaction pass a training-data build runs before export.  Native
+    ``regexp_replace`` chain (whole-stage codegen, no UDF).  Returns
+    struct(text, n_emails, n_ips, n_phones); counts are per-stage so
+    they equal the number of replacements made."""
+    t0 = c
+    n_emails = F.regexp_count(t0, F.lit(PII_EMAIL_RE))
+    t1 = F.regexp_replace(t0, PII_EMAIL_RE, "<EMAIL>")
+    n_ips = F.regexp_count(t1, F.lit(PII_IP_RE))
+    t2 = F.regexp_replace(t1, PII_IP_RE, "<IP>")
+    n_phones = F.regexp_count(t2, F.lit(PII_PHONE_RE))
+    t3 = F.regexp_replace(t2, PII_PHONE_RE, "<PHONE>")
+    return F.struct(
+        t3.alias("text"),
+        n_emails.cast("int").alias("n_emails"),
+        n_ips.cast("int").alias("n_ips"),
+        n_phones.cast("int").alias("n_phones"),
+    )
+
+
+def sql_pii_scrub_cols(expr: str) -> dict[str, str]:
+    """DuckDB twin of ``pii_scrub`` as named column expressions
+    (RE2 needs the 'g' flag for replace-all; counts via
+    regexp_extract_all)."""
+    e, i, p = PII_EMAIL_RE, PII_IP_RE, PII_PHONE_RE
+    t1 = f"regexp_replace({expr}, '{e}', '<EMAIL>', 'g')"
+    t2 = f"regexp_replace({t1}, '{i}', '<IP>', 'g')"
+    t3 = f"regexp_replace({t2}, '{p}', '<PHONE>', 'g')"
+    return {
+        "text": t3,
+        "n_emails": f"CAST(len(regexp_extract_all({expr}, '{e}')) AS INT)",
+        "n_ips": f"CAST(len(regexp_extract_all({t1}, '{i}')) AS INT)",
+        "n_phones": f"CAST(len(regexp_extract_all({t2}, '{p}')) AS INT)",
+    }
+
+
 def doc_fingerprint(c: Column) -> Column:
     """Deterministic content fingerprint: md5 of the normalized token
     stream (case/punctuation-insensitive) — the exact-dedup key."""
@@ -223,3 +445,111 @@ def sql_winnow_fingerprint_cte(
                       ELSE [] END) AS fingerprint
         FROM _wg
     )"""
+
+
+# ------------------------------------------------------------------
+# URL canonicalization (web-corpus URL-level dedup key)
+# ------------------------------------------------------------------
+
+# tracking params stripped by the canonicalizer (the industry-standard
+# set: UTM campaign tags + click ids)
+_URL_TRACKING_RE = r"^(utm_[^=]*|fbclid|gclid|ref)="
+
+
+def canonical_url(c: Column) -> Column:
+    """Canonical form of an absolute http(s) URL — the URL-level dedup
+    key a web-crawl pipeline groups by before content dedup (the same
+    page is crawled under case-variant hosts, default ports, tracking
+    params, fragments and trailing slashes):
+
+      * scheme + host lowercased, leading ``www.`` and default
+        ``:80``/``:443`` ports dropped;
+      * path kept case-sensitive, trailing slashes dropped;
+      * query params: tracking params (``utm_*``, ``fbclid``,
+        ``gclid``, ``ref``) and empties removed, the rest SORTED so
+        param order doesn't split the key;
+      * fragment dropped.
+
+    Pure native expressions (regexp + one filter/sort HOF pair) — no
+    UDF, row-local, safe in a scan-side projection at any scale.
+    """
+    u = F.trim(c)
+    scheme = F.lower(F.regexp_extract(u, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
+    rest = F.regexp_replace(u, r"^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
+    host = F.regexp_replace(
+        F.regexp_replace(
+            F.lower(F.regexp_extract(rest, r"^([^/?#]*)", 1)),
+            r"^www\.",
+            "",
+        ),
+        r":(80|443)$",
+        "",
+    )
+    pathqf = F.regexp_replace(rest, r"^[^/?#]*", "")
+    path = F.regexp_replace(
+        F.regexp_extract(pathqf, r"^([^?#]*)", 1), r"/+$", ""
+    )
+    query = F.regexp_extract(pathqf, r"\?([^#]*)", 1)
+    params = F.array_sort(
+        F.filter(
+            F.split(query, "&"),
+            lambda p: (p != F.lit("")) & ~p.rlike(_URL_TRACKING_RE),
+        )
+    )
+    qs = F.when(
+        F.size(params) > 0, F.concat(F.lit("?"), F.array_join(params, "&"))
+    ).otherwise(F.lit(""))
+    return F.concat(scheme, F.lit("://"), host, path, qs)
+
+
+def url_host(c: Column) -> Column:
+    """Lowercased registrable-ish host (www/default-port stripped) —
+    the per-site aggregation key (host-level quality/robots stats)."""
+    rest = F.regexp_replace(F.trim(c), r"^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.lower(F.regexp_extract(rest, r"^([^/?#]*)", 1)),
+            r"^www\.",
+            "",
+        ),
+        r":(80|443)$",
+        "",
+    )
+
+
+def sql_canonical_url(expr: str) -> str:
+    """DuckDB twin of :func:`canonical_url` (one list_filter lambda —
+    NOT nested inside another lambda, per the DuckDB lambda-nesting
+    bug note in normalizers.sql_soundex)."""
+    u = f"trim({expr})"
+    scheme = f"lower(regexp_extract({u}, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))"
+    rest = f"regexp_replace({u}, '^[a-zA-Z][a-zA-Z0-9+.-]*://', '')"
+    host = (
+        f"regexp_replace(regexp_replace("
+        f"lower(regexp_extract({rest}, '^([^/?#]*)', 1)), "
+        f"'^www\\.', ''), ':(80|443)$', '')"
+    )
+    pathqf = f"regexp_replace({rest}, '^[^/?#]*', '')"
+    path = (
+        f"regexp_replace(regexp_extract({pathqf}, '^([^?#]*)', 1), "
+        f"'/+$', '')"
+    )
+    query = f"regexp_extract({pathqf}, '\\?([^#]*)', 1)"
+    params = (
+        f"list_sort(list_filter(string_split({query}, '&'), "
+        f"p -> p <> '' AND NOT regexp_matches(p, '{_URL_TRACKING_RE}')))"
+    )
+    qs = (
+        f"CASE WHEN len({params}) > 0 "
+        f"THEN '?' || array_to_string({params}, '&') ELSE '' END"
+    )
+    return f"{scheme} || '://' || {host} || {path} || {qs}"
+
+
+def sql_url_host(expr: str) -> str:
+    rest = f"regexp_replace(trim({expr}), '^[a-zA-Z][a-zA-Z0-9+.-]*://', '')"
+    return (
+        f"regexp_replace(regexp_replace("
+        f"lower(regexp_extract({rest}, '^([^/?#]*)', 1)), "
+        f"'^www\\.', ''), ':(80|443)$', '')"
+    )

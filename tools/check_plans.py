@@ -249,6 +249,49 @@ def main(sf_dir: str) -> int:
             "Exchange hashpartitioning" not in inc_plan,
         )
 
+    # 7. corpus family: the stratified-sample filter is scan-level (no
+    # exchange — the draw is a pure per-row expression), and the
+    # decontaminate benchmark side broadcasts (the corpus fp table
+    # must never shuffle for the membership mark)
+    from record_linkage_ldu_spark.operators import corpus as corpus_ops
+
+    docs_tbl = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    samp_plan = executed_plan(
+        corpus_ops.stratified_sample(docs_tbl, rates={"en": 0.5})
+    )
+    check(
+        "stratified sample is one scan-level filter (no exchange)",
+        "Exchange" not in samp_plan and "FileScan parquet" in samp_plan,
+    )
+    decon_plan = executed_plan(
+        corpus_ops.decontaminate(
+            docs_tbl.where(F.col("doc_id") % 37 != 0),
+            docs_tbl.where(F.col("doc_id") % 37 == 0),
+        )
+    )
+    check(
+        "decontaminate broadcasts the benchmark fingerprints",
+        "BroadcastHashJoin" in decon_plan
+        and "SortMergeJoin" not in decon_plan,
+    )
+    bloom_plan = executed_plan(
+        corpus_ops.bloom_decontaminate(
+            docs_tbl.where(F.col("doc_id") % 37 != 0),
+            docs_tbl.where(F.col("doc_id") % 37 == 0),
+        )
+    )
+    check(
+        "bloom pre-filter probes via broadcast (no SMJ on positions)",
+        bloom_plan.count("BroadcastHashJoin") >= 2  # bloom set + exact
+        and "CartesianProduct" not in bloom_plan,
+    )
+    ld_plan = executed_plan(corpus_ops.line_dedup(docs_tbl))
+    check(
+        "line_dedup: equi-joins only, no cartesian/nested-loop",
+        "CartesianProduct" not in ld_plan
+        and "BroadcastNestedLoopJoin" not in ld_plan,
+    )
+
     # r4 scorers/graph ops: the pair dot product and the wedge join
     # must stay keyed equi-joins; the only nested-loop allowed in
     # tfidf is the broadcast of the 1-row corpus count
@@ -371,7 +414,6 @@ def main(sf_dir: str) -> int:
         prefix_filter_pairs,
     )
 
-    docs_tbl = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs_small = docs_tbl.limit(300).localCheckpoint(eager=True)
     pf_plan = executed_plan(
         prefix_filter_pairs(docs_small, threshold=0.8, pin=False)
@@ -521,6 +563,43 @@ def main(sf_dir: str) -> int:
         and "CartesianProduct" not in sp_plan
         and "BroadcastNestedLoopJoin" not in sp_plan
         and "BatchEvalPython" not in sp_plan,
+    )
+
+    # r4c: shingle novelty — parquet scan prunes to (doc_id, text);
+    # payload columns (lang/source/n_chars) never leave the scan
+    from record_linkage_ldu_spark.operators.corpus import shingle_novelty
+
+    nov = shingle_novelty(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    nov_expl = optimized_explain(nov)
+    import re as _re
+
+    read_schemas = _re.findall(r"ReadSchema: struct<([^>]*)>", nov_expl)
+    check(
+        "shingle novelty: scan prunes to doc_id+text",
+        bool(read_schemas)
+        and all(
+            set(
+                c.split(":")[0] for c in rs.split(",") if c
+            ) <= {"doc_id", "text"}
+            for rs in read_schemas
+        ),
+        f"schemas={read_schemas}",
+    )
+
+    # r4c: mixture rebalance — probs side broadcast, corpus never
+    # exchanged for the join
+    from record_linkage_ldu_spark.operators.corpus import mixture_rebalance
+
+    mr_plan = executed_plan(
+        mixture_rebalance(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"),
+            targets={"en": 0.5, "fr": 0.5},
+        )
+    )
+    check(
+        "mixture rebalance: broadcast probs join, no Python",
+        "BroadcastHashJoin" in mr_plan
+        and "BatchEvalPython" not in mr_plan,
     )
 
     print(f"\n{len(FAILURES)} failures: {FAILURES}")
