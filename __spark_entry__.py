@@ -8,8 +8,8 @@ records derived from sf0.001 testdata.
 SURVEY.md §2 (normalizers, filters, record surgery, blocking + caps,
 candidate pairs, similarity scores, combined score, rule masks, mask
 stats, connected components, cluster stats, P/R/F1 evaluation) plus
-the document extras still in the library (exact/minhash/jaccard
-dedup, ANN, media).
+the training-data-pipeline extras (exact/minhash/jaccard dedup, text
+analysis, the LLM-corpus operators, ANN, media).
 
 Oracle notes:
   * linkage queries run over a deterministic record table synthesized
@@ -42,7 +42,7 @@ from record_linkage_ldu_spark.config import (
 from record_linkage_ldu_spark.functions import normalizers as N
 from record_linkage_ldu_spark.functions import text as T
 from record_linkage_ldu_spark.functions.similarity import lev_sim_col, sql_lev_sim
-from record_linkage_ldu_spark.operators import ann, dedup, rules
+from record_linkage_ldu_spark.operators import ann, corpus, dedup, rules
 from record_linkage_ldu_spark.operators import evaluate as ev
 from record_linkage_ldu_spark.operators.evaluate import (
     cluster_diff,
@@ -131,6 +131,8 @@ _PAIR_FIELDS = (
     "country",
 )
 _VSO_FIELDS = ("name", "email", "phone", "zip")
+# query terms of the bm25_search entry
+_BM25_TERMS = ("spark", "window", "merge", "vector")
 # candidate functional dependencies to profile (no "group": it is a
 # reserved word in the DuckDB twin and the gold label anyway)
 _FD_DEPS = (
@@ -822,8 +824,37 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             threshold=0.3,
         )
     )
+    # entity-aware train/valid/test split: assignment is a hash of
+    # the near-dup CLUSTER id, so near-duplicates never straddle
+    # train and test (the intra-corpus leak decontamination can't see)
+    q["leakage_safe_split"] = lambda s, d: corpus.leakage_safe_split(
+        _t(s, d, "documents"),
+        dedup.near_duplicate_keep_list(_t(s, d, "documents"), threshold=0.3),
+    )
     # soft dedup: weight = 1/cluster_size instead of drop — a cluster
     # of n near-copies contributes one doc's worth of training mass
+    # dataset-version audit: added/removed/changed docs between two
+    # snapshots (v2 = deterministic derivative of the documents table)
+    q["corpus_snapshot_diff"] = lambda s, d: corpus.snapshot_diff(
+        _t(s, d, "documents"),
+        _t(s, d, "documents")
+        .where(F.col("doc_id") % 11 != 0)
+        .select(
+            "doc_id",
+            F.when(
+                F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" v2"))
+            )
+            .otherwise(F.col("text"))
+            .alias("text"),
+        )
+        .unionByName(
+            _t(s, d, "documents")
+            .where(F.col("doc_id") % 13 == 0)
+            .select(
+                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+            )
+        ),
+    )
     q["dedup_weights"] = lambda s, d: dedup.dedup_weights(
         dedup.near_duplicate_keep_list(_t(s, d, "documents"), threshold=0.3)
     )
@@ -885,6 +916,119 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["winnow_near_dups"] = lambda s, d: dedup.winnow_near_duplicates(
         _t(s, d, "documents"), min_shared=2
     )
+    q["token_count"] = lambda s, d: _t(s, d, "documents").select(
+        "doc_id", T.token_count(F.col("text")).alias("n_tokens")
+    )
+    q["lang_id"] = lambda s, d: _t(s, d, "documents").select(
+        "doc_id", T.lang_id(F.col("text")).alias("lang_pred")
+    )
+    q["quality_score"] = lambda s, d: _t(s, d, "documents").select(
+        "doc_id", T.quality_score(F.col("text")).alias("quality")
+    )
+
+    # ---------- corpus pipeline (operators/corpus.py) ----------
+    # composed C4-style cleaning with an observable reject reason
+    q["corpus_filter"] = lambda s, d: corpus.corpus_filter_flags(
+        _t(s, d, "documents"), min_tokens=20, min_quality=0.3
+    )
+    # per-stratum lexical diversity (type-token / hapax ratios): the
+    # Zipf-tail health check that catches template floods
+    q["vocab_stats"] = lambda s, d: corpus.vocab_stats(
+        _t(s, d, "documents")
+    )
+    # per-source hard cap (max N docs per host): the anti-spam quota a
+    # rate-based sample can't express; skew-safe two-pass ranking
+    q["source_quota_sample"] = lambda s, d: corpus.source_quota_sample(
+        _t(s, d, "documents"), group_col="source", cap=10
+    )
+    # deterministic per-stratum hash sampling (corpus mixing)
+    q["stratified_sample"] = lambda s, d: corpus.stratified_sample(
+        _t(s, d, "documents"),
+        strata_col="lang",
+        rates={"en": 0.5, "fr": 0.8},
+        default_rate=0.25,
+    )
+    # target-mixture downsampling: keep probabilities DERIVED from the
+    # measured stratum frequencies (DoReMi-style reweighting as pure
+    # downsampling) — stratified_sample takes rates as given, this
+    # computes them from the corpus
+    q["mixture_rebalance"] = lambda s, d: corpus.mixture_rebalance(
+        _t(s, d, "documents"),
+        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
+    )
+    # the upsampling twin: epochs-per-source with per-doc copy
+    # ordinals (scarce strata repeat, total output ~N shaped as
+    # targets)
+    q["mixture_epochs"] = lambda s, d: corpus.mixture_epochs(
+        _t(s, d, "documents"),
+        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
+    )
+    # per-doc novelty: share of the doc's shingles unique to it —
+    # the document-level redundancy dial (template floods score low
+    # even when no single pair crosses a near-dup threshold)
+    q["shingle_novelty"] = lambda s, d: corpus.shingle_novelty(
+        _t(s, d, "documents")
+    )
+    # the flood report: top-N most-duplicated shingles per language —
+    # names the repeated content itself (banners, footers, templates)
+    q["template_floods"] = lambda s, d: corpus.template_floods(
+        _t(s, d, "documents")
+    )
+    # per-stratum mixing evidence (requested vs realized rates)
+    q["mixture_stats"] = lambda s, d: corpus.mixture_stats(
+        _t(s, d, "documents"),
+        strata_col="lang",
+        rates={"en": 0.5, "fr": 0.8},
+        default_rate=0.25,
+    )
+    # per-stratum token-length percentiles (length-gate tuning view)
+    q["token_percentiles"] = lambda s, d: corpus.token_percentiles(
+        _t(s, d, "documents")
+    )
+    # token-budgeted output sharding (two-pass distributed cumsum)
+    q["token_budget_shards"] = lambda s, d: corpus.token_budget_shards(
+        _t(s, d, "documents"), budget=5000
+    )
+    # benchmark decontamination: winnowing-fingerprint overlap between
+    # the corpus and a predicate-held-out "eval set"
+    q["decontaminate"] = lambda s, d: corpus.decontaminate(
+        _t(s, d, "documents").where(F.col("doc_id") % 37 != 0),
+        _t(s, d, "documents").where(F.col("doc_id") % 37 == 0),
+        min_shared=2,
+    )
+    # feature-hashed linear quality model (classifier-filter hook)
+    q["hashed_bow_score"] = lambda s, d: corpus.hashed_bow_score(
+        _t(s, d, "documents")
+    )
+    # Gopher-style repetition quality signals (row-local, no shuffle)
+    q["repetition_signals"] = lambda s, d: corpus.repetition_signals(
+        _t(s, d, "documents")
+    )
+    # overlapping token-window chunking (corpus docs -> training rows)
+    q["chunk_documents"] = lambda s, d: corpus.chunk_documents(
+        _t(s, d, "documents"), chunk=32, overlap=8
+    )
+    # deterministic sharded training-order shuffle
+    q["corpus_shuffle"] = lambda s, d: corpus.corpus_shuffle(
+        _t(s, d, "documents"), n_shards=16, seed="r3"
+    )
+    # global (non-sharded) order via the two-pass global_ranks recipe
+    q["corpus_shuffle_global"] = lambda s, d: corpus.corpus_shuffle_global(
+        _t(s, d, "documents"), seed="r3"
+    )
+    # PII redaction over record free text (emails/phones live in the
+    # synthetic records; counts are per-stage so they equal the number
+    # of replacements made)
+    q["pii_scrub"] = lambda s, d: (
+        synth_records(_t(s, d, "customer"))
+        .select(
+            "doc_id",
+            T.pii_scrub(
+                F.concat_ws(" ", "name", "phone", "email", "address")
+            ).alias("p"),
+        )
+        .select("doc_id", "p.text", "p.n_emails", "p.n_ips", "p.n_phones")
+    )
 
     # ---------- ANN over embeddings ----------
     q["embedding_near_dups"] = lambda s, d: ann.embedding_near_duplicates(
@@ -931,11 +1075,48 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _t(s, d, "embeddings"), threshold=0.2, modulus=64
     )
 
+    # corpus-trained unigram-LM quality: mean token log-prob under the
+    # corpus's own smoothed unigram distribution (CCNet-style filter)
+    q["unigram_lm_scores"] = lambda s, d: corpus.unigram_lm_scores(
+        _t(s, d, "documents")
+    )
+    # bigram conditional LM: order-sensitive — catches shuffled-word
+    # salad that keeps its unigram perplexity
+    q["bigram_lm_scores"] = lambda s, d: corpus.bigram_lm_scores(
+        _t(s, d, "documents")
+    )
+    # lang-id accuracy audit: predictions vs the corpus's own labels
+    q["lang_confusion"] = lambda s, d: corpus.lang_confusion(
+        _t(s, d, "documents")
+    )
+    # collocation mining (top adjacent pairs by PMI) — the phrase
+    # pass a vocabulary build runs before merging multiword units
+    q["pmi_collocations"] = lambda s, d: corpus.pmi_collocations(
+        _t(s, d, "documents"), min_count=20, top_k=50
+    )
+    # per-doc tf-idf keyword profiles (dedup explainability / cheap
+    # topic labels)
+    q["tfidf_keywords"] = lambda s, d: corpus.tfidf_keywords(
+        _t(s, d, "documents")
+    )
+    # per-stratum Zipf exponent: distribution-shape vocabulary health
+    q["zipf_slope"] = lambda s, d: corpus.zipf_slope(_t(s, d, "documents"))
     # functional-dependency profiling over the normalized records —
     # which column implications hold (g3 strength), driving blocking-
     # surrogate and rule-guard choices
     q["fd_profile"] = lambda s, d: profile_dependencies(
         _records(s, d), _FD_DEPS
+    )
+    # deterministic weighted sampling (Efraimidis-Spirakis A-ES keys):
+    # per-lang top-40 docs proportional to length — the weighted
+    # complement of stratified_sample, zero RNG state
+    q["weighted_sample"] = lambda s, d: corpus.weighted_sample(
+        _t(s, d, "documents"), "n_chars", 40, strata_col="lang"
+    )
+    # BM25 lexical retrieval (Lucene idf variant) — the sparse first-
+    # stage retriever next to the dense ANN family
+    q["bm25_search"] = lambda s, d: corpus.bm25_search(
+        _t(s, d, "documents"), _BM25_TERMS
     )
 
     # composite soundex keys — hash-green since r3: sql_soundex
@@ -1033,6 +1214,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["incremental_linkage_step"] = lambda s, d: _incremental_step(s, d)
     # measured ANN recall vs exact ground truth (deploy-gate metric)
     q["ann_recall"] = lambda s, d: _ann_recall(s, d)
+    # learned-weights BoW scorer (broadcast vocabulary lookup, same
+    # row-local plan as the hash stand-in)
+    q["hashed_bow_learned"] = lambda s, d: corpus.bow_score_weighted(
+        _t(s, d, "documents"), _BOW_WEIGHTS
+    )
+    # CCNet/RefinedWeb-style line-level boilerplate removal over a
+    # deterministically lined corpus (10-token lines + planted
+    # header/footer variants shared across docs)
+    q["line_dedup"] = lambda s, d: corpus.line_dedup(_lined_docs(s, d))
+    # URL canonicalization (crawl URL-level dedup key): case-variant
+    # hosts, default ports, www, tracking params, fragments and
+    # trailing slashes collapse to one key; n_same_url counts the
+    # collisions the canonicalizer recovered
+    q["url_canonicalize"] = lambda s, d: _url_canonicalize(s, d)
+    # Bloom-pre-filtered decontamination: same eval split as
+    # `decontaminate`, compact bit-position pre-filter before the
+    # exact join, false positives observable per doc (n_bloom_fp)
+    q["bloom_decontaminate"] = lambda s, d: corpus.bloom_decontaminate(
+        _t(s, d, "documents").where(F.col("doc_id") % 37 != 0),
+        _t(s, d, "documents").where(F.col("doc_id") % 37 == 0),
+        min_shared=2,
+    )
     # media-content blocking tier: records sharing an identical image
     # payload are linkage candidates — the text-free signal interleaved
     # documents add over flat records (the a/b/c copies of one entity
@@ -1348,8 +1551,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _NEWEST_FIRST = [
     # ---- DRIVER WINDOW (the driver records exactly the first 50
     # dict entries — verified against the r1-r4 files).  The round-5
-    # composition, with the corpus, Fellegi-Sunter EM, PPRL and URL
-    # entries dropped and the next survivors moved up in order.  Left
+    # composition, without the Fellegi-Sunter EM and PPRL entries
+    # (deleted) and the corpus and URL entries (moved to the block
+    # after the window), the next survivors moved up in order.  Left
     # outside: family-redundant entries,
     # every one hash-green in tools/check_oracle.py runs. ----
     "cjk_minhash_near_dups",
@@ -1402,6 +1606,44 @@ _NEWEST_FIRST = [
     "null_score_histogram",
     "pair_provenance",
     "blocking_miss_diagnosis",
+    # ---- LLM-corpus entries (operators/corpus.py and the corpus-only
+    # text functions), kept outside the window so that deleting the
+    # corpus library leaves the window as it is ----
+    "leakage_safe_split",
+    "bloom_decontaminate",
+    "url_canonicalize",
+    "mixture_rebalance",
+    "mixture_epochs",
+    "shingle_novelty",
+    "template_floods",
+    "lang_confusion",
+    "zipf_slope",
+    "pmi_collocations",
+    "tfidf_keywords",
+    "weighted_sample",
+    "unigram_lm_scores",
+    "bigram_lm_scores",
+    "bm25_search",
+    "vocab_stats",
+    "source_quota_sample",
+    "corpus_snapshot_diff",
+    "line_dedup",
+    "hashed_bow_learned",
+    "pii_scrub",
+    "corpus_shuffle_global",
+    "corpus_shuffle",
+    "chunk_documents",
+    "repetition_signals",
+    "hashed_bow_score",
+    "decontaminate",
+    "token_budget_shards",
+    "token_percentiles",
+    "mixture_stats",
+    "stratified_sample",
+    "corpus_filter",
+    "quality_score",
+    "lang_id",
+    "token_count",
     # ---- previously driver-recorded (green in r1-r4 CORRECTNESS
     # files) or judge-sweep green; order beyond 50 is cosmetic ----
     "benford_profile",
@@ -2172,6 +2414,73 @@ def _incremental_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lined_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic multi-line corpus for the line_dedup entry: the
+    synthetic documents are single-line word streams, so real lines
+    are derived — body = the doc's tokens grouped into 10-token lines,
+    bracketed by planted boilerplate (3 header variants keyed by
+    doc_id%3, 2 footer variants by doc_id%2 — each shared by ~a third/
+    half of the corpus, exactly the repeated-verbatim nav/copyright
+    shape line dedup exists to strip).  The DuckDB twin builds the
+    identical corpus (``_SQL_LINED`` CTE)."""
+    d = _t(spark, sf_dir, "documents")
+    toks = T.tokens(F.coalesce(F.col("text"), F.lit("")))
+    staged = d.select("doc_id", toks.alias("_t"))
+    n_chunks = F.greatest(
+        F.lit(1),
+        F.floor((F.size("_t") + F.lit(9)) / F.lit(10)).cast("int"),
+    )
+    body = F.array_join(
+        F.transform(
+            F.sequence(F.lit(0), n_chunks - F.lit(1)),
+            lambda i: F.array_join(
+                F.slice("_t", i * F.lit(10) + F.lit(1), F.lit(10)), " "
+            ),
+        ),
+        "\n",
+    )
+    text2 = F.concat(
+        F.lit("hdr banner variant "),
+        F.pmod("doc_id", F.lit(3)).cast("string"),
+        F.lit("\n"),
+        body,
+        F.lit("\n"),
+        F.lit("footer copyright notice "),
+        F.pmod("doc_id", F.lit(2)).cast("string"),
+    )
+    return staged.select("doc_id", text2.alias("text"))
+
+
+_SQL_LINED = f"""
+        tok AS (
+            SELECT doc_id, {T.sql_tokens("coalesce(text, '')")} AS t
+            FROM documents
+        ),
+        ch AS (
+            SELECT doc_id, t,
+                   unnest(range(0, greatest(1, (len(t) + 9) // 10)))
+                       AS cid
+            FROM tok
+        ),
+        body AS (
+            SELECT doc_id,
+                   string_agg(
+                       coalesce(
+                           array_to_string(
+                               t[cid * 10 + 1 : cid * 10 + 10], ' '),
+                           ''),
+                       chr(10) ORDER BY cid) AS b
+            FROM ch GROUP BY doc_id
+        ),
+        lined AS (
+            SELECT doc_id,
+                   'hdr banner variant ' || (doc_id % 3) || chr(10) ||
+                   b || chr(10) ||
+                   'footer copyright notice ' || (doc_id % 2) AS text
+            FROM body
+        )"""
+
+
 def _refined_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic hierarchical block refinement over the records view:
     component hierarchy = first name letter -> 4-char name prefix ->
@@ -2402,6 +2711,43 @@ def _media_block_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candidate_pairs(keys, dedup=False)
 
 
+def _url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL-level dedup key over a deterministically derived URL set
+    (the synthetic docs carry no URL column): each doc gets an
+    absolute URL with the messiness the canonicalizer exists to
+    collapse — uppercase scheme/host, ``WWW.``, explicit ``:443``,
+    and one of three tails (tracking params + unsorted query +
+    fragment / the same query clean / no query).  Tails 0 and 1
+    canonicalize to the SAME key, so ``n_same_url`` measurably counts
+    recovered collisions.  Twin builds the identical URL set."""
+    from pyspark.sql.window import Window
+
+    d = _t(spark, sf_dir, "documents").select("doc_id")
+    variant = F.pmod("doc_id", F.lit(3))
+    tail = (
+        F.when(variant == 0, F.lit("/?utm_source=feed&b=2&a=1#top"))
+        .when(variant == 1, F.lit("?a=1&b=2"))
+        .otherwise(F.lit(""))
+    )
+    url = F.concat(
+        F.lit("HTTPS://WWW.Example"),
+        F.pmod("doc_id", F.lit(5)).cast("string"),
+        F.lit(".COM:443/Path/"),
+        F.pmod("doc_id", F.lit(7)).cast("string"),
+        tail,
+    )
+    urls = d.select("doc_id", url.alias("url"))
+    out = urls.select(
+        "doc_id",
+        T.canonical_url(F.col("url")).alias("canonical"),
+        T.url_host(F.col("url")).alias("host"),
+    )
+    return out.withColumn(
+        "n_same_url",
+        F.count("*").over(Window.partitionBy("canonical")).cast("long"),
+    )
+
+
 def _cluster_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-level quality of the pipeline's own clustering vs the
     synth gold partition (entity key embedded in doc_id): B-cubed
@@ -2535,6 +2881,21 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+
+
+# learned-weights vocabulary for the hashed_bow_learned entry:
+# an explicit token->weight lookup (stands in for a trained linear
+# filter's coefficients), injected identically into Spark (map
+# literal) and DuckDB (CASE chain)
+_BOW_WEIGHTS = {
+    t: ((i * 37) % 19) - 9
+    for i, t in enumerate(
+        "the of and to in a is that it for as was with be by on not he "
+        "this are or his from at which but have an they you were her "
+        "all she there would their we him been has when who will no "
+        "more if out so said what its about than into them can only".split()
+    )
+}
 
 
 def _span_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3215,6 +3576,33 @@ def oracle_sql() -> dict[str, str]:
         shingle_size=5,
         tokenizer="char",
     )
+    sql["corpus_snapshot_diff"] = """
+        WITH newv AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
+                        ELSE text END AS text
+            FROM documents WHERE doc_id % 11 <> 0
+            UNION ALL
+            SELECT doc_id + 1000000 AS doc_id, text
+            FROM documents WHERE doc_id % 13 = 0
+        ),
+        o AS (SELECT doc_id, md5(text) AS old_fp, 1 AS in_old
+              FROM documents),
+        n AS (SELECT doc_id, md5(text) AS new_fp, 1 AS in_new FROM newv)
+        SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+               CASE WHEN o.in_old IS NULL THEN 'added'
+                    WHEN n.in_new IS NULL THEN 'removed'
+                    WHEN o.old_fp IS DISTINCT FROM n.new_fp
+                        THEN 'changed'
+               END AS status,
+               o.old_fp, n.new_fp
+        FROM o FULL JOIN n ON o.doc_id = n.doc_id
+        WHERE (CASE WHEN o.in_old IS NULL THEN 'added'
+                    WHEN n.in_new IS NULL THEN 'removed'
+                    WHEN o.old_fp IS DISTINCT FROM n.new_fp
+                        THEN 'changed'
+               END) IS NOT NULL
+    """
     sql["dedup_weights"] = f"""
         WITH RECURSIVE np AS (
             {dedup.sql_minhash_near_duplicates("documents", threshold=0.3)}
@@ -3240,6 +3628,26 @@ def oracle_sql() -> dict[str, str]:
         SELECT c.doc_id, c.canonical_id, s.cluster_size,
                round(CAST(1.0 AS DOUBLE) / s.cluster_size, 6) AS weight
         FROM canon c JOIN sizes s USING (canonical_id)
+    """
+    sql["leakage_safe_split"] = f"""
+        WITH RECURSIVE np AS (
+            {dedup.sql_minhash_near_duplicates("documents", threshold=0.3)}
+        ),
+        nodes AS (SELECT doc_id FROM documents),
+        edges AS (
+            SELECT doc_id_1 AS s, doc_id_2 AS d FROM np
+            UNION
+            SELECT doc_id_2 AS s, doc_id_1 AS d FROM np
+        ),
+        reach(a, b) AS (
+            SELECT doc_id, doc_id FROM nodes
+            UNION
+            SELECT r.a, e.d FROM reach r JOIN edges e ON r.b = e.s
+        ),
+        canon AS MATERIALIZED (
+            SELECT a AS doc_id, min(b) AS canonical_id FROM reach GROUP BY a
+        )
+        {corpus.sql_leakage_safe_split("canon")}
     """
     sql["near_dup_keep_list"] = f"""
         WITH RECURSIVE np AS (
@@ -3320,6 +3728,51 @@ def oracle_sql() -> dict[str, str]:
     """
     sql["winnow_near_dups"] = dedup.sql_winnow_near_duplicates(
         "documents", min_shared=2
+    )
+    sql["token_count"] = f"""
+        SELECT doc_id, {T.sql_token_count("text")} AS n_tokens FROM documents
+    """
+    sql["lang_id"] = f"""
+        SELECT doc_id, {T.sql_lang_id("text")} AS lang_pred FROM documents
+    """
+    sql["quality_score"] = f"""
+        SELECT doc_id, {T.sql_quality_score("text")} AS quality FROM documents
+    """
+    sql["corpus_filter"] = corpus.sql_corpus_filter_flags(
+        "documents", min_tokens=20, min_quality=0.3
+    )
+    sql["source_quota_sample"] = corpus.sql_source_quota_sample(
+        "documents", group_col="source", cap=10
+    )
+    sql["vocab_stats"] = corpus.sql_vocab_stats("documents")
+    sql["stratified_sample"] = corpus.sql_stratified_sample(
+        "documents",
+        strata_col="lang",
+        rates={"en": 0.5, "fr": 0.8},
+        default_rate=0.25,
+    )
+    sql["shingle_novelty"] = corpus.sql_shingle_novelty("documents")
+    sql["template_floods"] = corpus.sql_template_floods("documents")
+    sql["mixture_rebalance"] = corpus.sql_mixture_rebalance(
+        "documents",
+        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
+    )
+    sql["mixture_epochs"] = corpus.sql_mixture_epochs(
+        "documents",
+        targets={"en": 0.3, "fr": 0.25, "de": 0.25, "es": 0.2},
+    )
+    sql["mixture_stats"] = corpus.sql_mixture_stats(
+        "documents",
+        strata_col="lang",
+        rates={"en": 0.5, "fr": 0.8},
+        default_rate=0.25,
+    )
+    sql["token_percentiles"] = corpus.sql_token_percentiles("documents")
+    sql["token_budget_shards"] = corpus.sql_token_budget_shards(
+        "documents", budget=5000
+    )
+    sql["decontaminate"] = corpus.sql_decontaminate(
+        "documents", "doc_id % 37 = 0", min_shared=2
     )
     # jw twin: the missing->0 and identical->1 rules are the kernel's
     # (jw_sim_col); duckdb's builtin returns 0.0 for ''='' so the
@@ -3492,6 +3945,27 @@ def oracle_sql() -> dict[str, str]:
         FROM toks
         WHERE first_tok IS NOT NULL AND first_tok <> ''
     """
+    sql["hashed_bow_score"] = corpus.sql_hashed_bow_score("documents")
+    sql["repetition_signals"] = corpus.sql_repetition_signals("documents")
+    sql["chunk_documents"] = corpus.sql_chunk_documents(
+        "documents", chunk=32, overlap=8
+    )
+    sql["corpus_shuffle"] = corpus.sql_corpus_shuffle(
+        "documents", n_shards=16, seed="r3"
+    )
+    sql["corpus_shuffle_global"] = corpus.sql_corpus_shuffle_global(
+        "documents", seed="r3"
+    )
+    _pii = T.sql_pii_scrub_cols("concat_ws(' ', name, phone, email, address)")
+    sql["pii_scrub"] = f"""
+        WITH {synth_sql_cte()}
+        SELECT doc_id,
+               {_pii["text"]} AS text,
+               {_pii["n_emails"]} AS n_emails,
+               {_pii["n_ips"]} AS n_ips,
+               {_pii["n_phones"]} AS n_phones
+        FROM synth
+    """
     sql["embedding_near_dups"] = ann.sql_embedding_near_duplicates(
         "embeddings", threshold=0.2, nbits=8
     )
@@ -3508,6 +3982,18 @@ def oracle_sql() -> dict[str, str]:
     sql["semdedup"] = ann.sql_semdedup("embeddings", threshold=0.2, modulus=64)
     sql["simhash_near_dups"] = dedup.sql_simhash_near_duplicates(
         "documents", max_hamming=3, n_bands=4
+    )
+    sql["unigram_lm_scores"] = corpus.sql_unigram_lm_scores("documents")
+    sql["bigram_lm_scores"] = corpus.sql_bigram_lm_scores("documents")
+    sql["lang_confusion"] = corpus.sql_lang_confusion("documents")
+    sql["pmi_collocations"] = corpus.sql_pmi_collocations(
+        "documents", min_count=20, top_k=50
+    )
+    sql["tfidf_keywords"] = corpus.sql_tfidf_keywords("documents")
+    sql["zipf_slope"] = corpus.sql_zipf_slope("documents")
+    sql["bm25_search"] = corpus.sql_bm25_search("documents", _BM25_TERMS)
+    sql["weighted_sample"] = corpus.sql_weighted_sample(
+        "documents", "n_chars", 40, strata_col="lang"
     )
     sql["fd_profile"] = sql_profile_dependencies(
         _sql_chain("norm") + " SELECT * FROM norm", _FD_DEPS
@@ -3572,6 +4058,10 @@ def oracle_sql() -> dict[str, str]:
     # the SAME recursive-CC oracle as cc_clusters (see
     # _incremental_step's equality argument)
     sql["incremental_linkage_step"] = sql["cc_clusters"]
+    sql["line_dedup"] = corpus.sql_line_dedup("lined", pre_cte=_SQL_LINED)
+    sql["bloom_decontaminate"] = corpus.sql_bloom_decontaminate(
+        "documents", "doc_id % 37 = 0", min_shared=2
+    )
     sql["golden_records"] = f"""
         {_SQL_CC},
         clusters AS (
@@ -4690,6 +5180,25 @@ def oracle_sql() -> dict[str, str]:
         FROM mkeys a JOIN mkeys b
           ON a.block_key = b.block_key AND a.doc_id < b.doc_id
     """
+    _canon = T.sql_canonical_url("url")
+    sql["url_canonicalize"] = f"""
+        WITH u AS (
+            SELECT doc_id,
+                   'HTTPS://WWW.Example' || (doc_id % 5) ||
+                   '.COM:443/Path/' || (doc_id % 7) ||
+                   CASE (doc_id % 3)
+                        WHEN 0 THEN '/?utm_source=feed&b=2&a=1#top'
+                        WHEN 1 THEN '?a=1&b=2'
+                        ELSE '' END AS url
+            FROM documents
+        )
+        SELECT doc_id,
+               {_canon} AS canonical,
+               {T.sql_url_host("url")} AS host,
+               CAST(count(*) OVER (PARTITION BY {_canon}) AS BIGINT)
+                   AS n_same_url
+        FROM u
+    """
     _cb_art = os.path.join(_ARTIFACT_DIR, "pq_codebook_trained.parquet")
     _cent_art = os.path.join(_ARTIFACT_DIR, "ivf_centroids_trained.parquet")
     sql["ann_recall"] = f"""
@@ -4854,6 +5363,9 @@ def oracle_sql() -> dict[str, str]:
                    AS ivfpq_recall_at5
         FROM s
     """
+    sql["hashed_bow_learned"] = corpus.sql_bow_score_weighted(
+        "documents", _BOW_WEIGHTS
+    )
     sql["media_dedup"] = f"""
         WITH {synth_sql_cte()},
     media AS (

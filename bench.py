@@ -7,8 +7,8 @@ line: {"metric", "value", "unit", "queries", "sf", ...extras}.
 Headline is the full ER pipeline (span codec -> normalize -> multi-key
 blocking + caps -> candidate pairs -> Arrow-UDF + native scoring ->
 rule masks -> connected components) over interleaved documents
-synthesized from `customer`; the rest covers the dedup and ANN
-operators.
+synthesized from `customer`; the rest covers the dedup / ANN / text /
+corpus operators.
 
 Every query is forced with the noop sink (full column computation —
 `count()` would let Catalyst prune the expensive columns).
@@ -331,6 +331,55 @@ def run_bench(sf_dir: str, cpus: int, include_linkage: bool = True) -> dict:
         qs["embedding_near_dups"](spark, sf_dir)
     ))
     timed("semdedup", lambda: _force(qs["semdedup"](spark, sf_dir)))
+    timed("text_analysis", lambda: _force(
+        qs["lang_id"](spark, sf_dir)
+        .join(qs["quality_score"](spark, sf_dir), "doc_id")
+        .join(qs["token_count"](spark, sf_dir), "doc_id")
+    ))
+    # corpus pipeline: composed cleaning + decontamination + sharding
+    # (one number for the operators/corpus.py family)
+    timed("corpus_pipeline", lambda: _force(
+        qs["corpus_filter"](spark, sf_dir)
+        .join(qs["token_budget_shards"](spark, sf_dir), "doc_id")
+        .join(qs["decontaminate"](spark, sf_dir), "doc_id", "left")
+    ))
+    # training-example prep: repetition signals + chunking + shuffle
+    # over documents, PII scrub over the synthesized record text
+    def _prep():
+        _force(
+            qs["repetition_signals"](spark, sf_dir)
+            .join(qs["chunk_documents"](spark, sf_dir), "doc_id")
+            .join(qs["corpus_shuffle"](spark, sf_dir), "doc_id")
+        )
+        _force(qs["pii_scrub"](spark, sf_dir))
+
+    timed("prep_ops", _prep)
+    # r4: line-level boilerplate removal + URL canonicalization (the
+    # crawl-side dedup keys; line_dedup is the shuffle-heavy one —
+    # explode -> census groupBy -> anti join -> reassembly groupBy)
+    timed("line_dedup", lambda: _force(qs["line_dedup"](spark, sf_dir)))
+    timed("url_canonicalize", lambda: _force(
+        qs["url_canonicalize"](spark, sf_dir)
+    ))
+    # r4 retrieval/quality: BM25 sparse search + unigram-LM perplexity
+    def _retrieval():
+        _force(qs["bm25_search"](spark, sf_dir))
+        _force(qs["unigram_lm_scores"](spark, sf_dir))
+
+    timed("retrieval_quality", _retrieval)
+
+    # r4c corpus-health pair: per-doc novelty + the named flood report.
+    # The r4c pruning/provenance diagnostics (wnp_pruned_pairs,
+    # pair_provenance) are sweep-validated but stay OUT of the
+    # headline wall: they enumerate the full per-key pair universe
+    # (~60s at sf0.1 — review-table work, not throughput ops), which
+    # would swamp round-over-round suite comparability.
+    def _r4c():
+        _force(qs["shingle_novelty"](spark, sf_dir))
+        _force(qs["template_floods"](spark, sf_dir))
+
+    timed("r4c_ops", _r4c)
+
     # production-hash note (VERDICT r3 #8): the oracle-parity md5 path
     # vs the xxhash64 production knob, same operator + input, measured
     # side by side (the headline minhash_dedup row above is md5).

@@ -2,7 +2,7 @@
 filter, deterministic stratified sampling, token-budget sharding,
 benchmark decontamination.
 
-The oracle twins are hash-gated by the driver; these tests pin the
+The oracle twins are hash-gated by tools/check_oracle.py; these tests pin the
 SEMANTIC invariants the hashes can't see (precedence, determinism,
 budget bounds, contamination guarantees, scale-path equivalences).
 """
@@ -1169,3 +1169,26 @@ def test_mixture_epochs_upsampling_shape(spark):
     # determinism under repartitioning
     out2 = mixture_epochs(docs.repartition(17), targets=targets)
     assert sorted(map(tuple, rows)) == sorted(map(tuple, out2.collect()))
+
+
+def test_unigram_lm(spark):
+    import math
+
+    from pyspark.sql import Row
+
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=1, text="a a b"),
+            Row(doc_id=2, text="a c"),
+            Row(doc_id=3, text=""),        # tokenless: excluded
+        ]
+    )
+    out = {r["doc_id"]: r for r in corpus.unigram_lm_scores(docs).collect()}
+    assert set(out) == {1, 2}
+    # N=5 tokens, V=3 types, add-1: p(a)=(3+1)/(5+3), p(b)=p(c)=(1+1)/8
+    pa, pb = 4 / 8, 2 / 8
+    exp1 = (2 * math.log(pa) + math.log(pb)) / 3
+    assert out[1]["avg_logprob"] == pytest.approx(exp1, abs=1e-6)
+    assert out[1]["n_tokens"] == 3
+    # rarer tokens -> higher perplexity
+    assert out[2]["perplexity"] > out[1]["perplexity"]

@@ -271,6 +271,36 @@ def main(sf_dir: str, out_dir: str) -> None:
         "",
     ]
 
+    # corpus cleaning report: the reject-reason histogram IS the
+    # observable output of corpus_filter_flags (operators/corpus.py) —
+    # a cleaning pass whose drops aren't reported is a silent filter
+    flags = qs["corpus_filter"](spark, sf_dir)
+    reasons = (
+        flags.groupBy("reject_reason").count().orderBy("reject_reason").collect()
+    )
+    total_docs = sum(r["count"] for r in reasons) or 1
+    decon = qs["decontaminate"](spark, sf_dir)
+    n_contaminated = decon.where(F.col("contaminated") == 1).count()
+    lines += [
+        "## Corpus cleaning (reject-reason histogram)",
+        "",
+        "| reason | docs | share |",
+        "|---|---|---|",
+    ]
+    for r in reasons:
+        name = r["reject_reason"] or "(kept)"
+        lines.append(
+            f"| {name} | {r['count']} | {r['count'] / total_docs:.1%} |"
+        )
+    lines += [
+        "",
+        "## Benchmark decontamination",
+        "",
+        f"corpus docs sharing >= 2 winnowing fingerprints with the "
+        f"held-out benchmark split: **{n_contaminated}**",
+        "",
+    ]
+
     # progressive-ER budget curve: what a 10%/20%/... scoring budget
     # buys — at 100 TB the pair-scoring stage is the spend, and this
     # is the table that justifies stopping early (or not)
@@ -411,6 +441,72 @@ def main(sf_dir: str, out_dir: str) -> None:
             f"{r['n_violating_groups']} | {r['g3_strength']:.4f} | "
             f"{'yes' if r['holds'] else 'no'} |"
         )
+    lines.append("")
+
+    # corpus perplexity distribution (unigram LM): both tails are
+    # review targets — low = boilerplate floods, high = OCR shred /
+    # wrong-language islands
+    ppl = qs["unigram_lm_scores"](spark, sf_dir)
+    pq = ppl.agg(
+        *[
+            F.expr(f"percentile(perplexity, {p})").alias(f"p{int(p*100)}")
+            for p in (0.01, 0.25, 0.5, 0.75, 0.99)
+        ]
+    ).collect()[0]
+    lines += [
+        "## Corpus perplexity (corpus-trained unigram LM)",
+        "",
+        "| p1 | p25 | median | p75 | p99 |",
+        "|---|---|---|---|---|",
+        "| "
+        + " | ".join(f"{pq[c]:.1f}" for c in ("p1", "p25", "p50", "p75", "p99"))
+        + " |",
+        "",
+        "review the tails: low = template/boilerplate flood, "
+        "high = shred or wrong-language content.",
+        "",
+    ]
+
+    # corpus-health pair (r4c): per-doc novelty distribution + the
+    # named flood report — the two views a cleaning pass is tuned
+    # against (both from hash-green queries() entries)
+    nov = {
+        r["b"]: r["n"]
+        for r in qs["shingle_novelty"](spark, sf_dir)
+        .where(F.col("novelty").isNotNull())
+        .groupBy(F.round("novelty", 1).alias("b"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    total_nov = sum(nov.values()) or 1
+    lines += [
+        "## Document novelty (share of corpus-unique shingles per doc)",
+        "",
+        "| novelty bucket | docs | |",
+        "|---|---|---|",
+    ]
+    for b in sorted(nov):
+        frac = nov[b] / total_nov
+        lines.append(f"| {b:.1f} | {nov[b]} | `{_bar(frac)}` |")
+    lines += [
+        "",
+        "a fat low-novelty head = template floods / syndication; the "
+        "flood table below names the content.",
+        "",
+        "## Template floods (top duplicated shingles per language)",
+        "",
+        "| lang | shingle | df |",
+        "|---|---|---|",
+    ]
+    floods = (
+        qs["template_floods"](spark, sf_dir)
+        .where(F.col("rank") <= 3)
+        .orderBy("stratum", "rank")
+        .collect()
+    )
+    for r in floods:
+        shingle = str(r["shingle"]).replace("|", "\\|")
+        lines.append(f"| {r['stratum']} | {shingle} | {r['df']} |")
     lines.append("")
 
     # the reference's FINAL artifact: the 3-sheet review workbook
