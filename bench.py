@@ -213,7 +213,6 @@ def skew_stress(spark) -> dict:
 def run_bench(sf_dir: str, cpus: int, include_linkage: bool = True) -> dict:
     import __spark_entry__ as E
     from record_linkage_ldu_spark.operators import ann, dedup
-    from record_linkage_ldu_spark.operators.cc import connected_components
     from record_linkage_ldu_spark.session import build_session
     from record_linkage_ldu_spark.sources.synth import synth_documents
 

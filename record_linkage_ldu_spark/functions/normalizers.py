@@ -32,7 +32,7 @@ from ..config import (
     NAME_STOPWORDS,
     STATE_LOOKUP,
 )
-from ..session import built_once
+from ..session import built_once, sql_string
 
 # ------------------------------------------------------------------
 # token-pipeline helpers
@@ -141,11 +141,18 @@ def normalize_website(c: Column) -> Column:
 
 
 def _map_lookup(c: Column, mapping: dict[str, str]) -> Column:
-    # the literal map is one Column built once per gateway
+    # the literal map is one Column built once per gateway, from one
+    # SQL string: one py4j round-trip for the map(lit, lit, ...) tree
+    # that F.create_map over F.lit Columns builds with several per
+    # literal
     items = tuple(mapping.items())
     m = built_once(
         ("literal_map", items),
-        lambda: F.create_map(*[F.lit(x) for kv in items for x in kv]),
+        lambda: F.expr(
+            "map("
+            + ", ".join(sql_string(x) for kv in items for x in kv)
+            + ")"
+        ),
     )
     # try_element_at: NULL (not ANSI error) on missing key -> fallback
     return F.coalesce(F.try_element_at(m, F.lower(F.trim(c))), c)

@@ -235,12 +235,6 @@ def jw_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return _pair_batch(a, b, _jw_cached)
 
 
-@pandas_udf(DoubleType())
-def lev_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    # fallback path; prefer lev_sim_col (JVM-native) in plans
-    return _pair_batch(a, b, lev_normalized_similarity)
-
-
 @lru_cache(maxsize=1 << 20)
 def _dl_cached(a: str, b: str) -> float:
     return dl_normalized_similarity(a, b)

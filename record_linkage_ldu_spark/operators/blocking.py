@@ -364,19 +364,29 @@ def salted_candidate_pairs(
     """
     # every triangle cell twice in one literal array — once per join
     # role; each record keeps its 'l' cells (x == bucket) and 'r'
-    # cells (y == bucket): s + 1 entries survive the filter.
-    all_cells = F.array(
-        *[
-            F.struct(
-                F.lit(x).alias("x"),
-                F.lit(y).alias("y"),
-                F.lit(role).alias("role"),
+    # cells (y == bucket): s + 1 entries survive the filter.  Built
+    # once per gateway: the array is ~4 py4j round-trips per literal.
+    def build_cells() -> Column:
+        all_cells = F.array(
+            *[
+                F.struct(
+                    F.lit(x).alias("x"),
+                    F.lit(y).alias("y"),
+                    F.lit(role).alias("role"),
+                )
+                for x in range(salt)
+                for y in range(x, salt)
+                for role in ("l", "r")
+            ]
+        )
+        return F.explode(
+            F.filter(
+                all_cells,
+                lambda c: ((c["role"] == F.lit("l")) & (c["x"] == F.col("bucket")))
+                | ((c["role"] == F.lit("r")) & (c["y"] == F.col("bucket"))),
             )
-            for x in range(salt)
-            for y in range(x, salt)
-            for role in ("l", "r")
-        ]
-    )
+        ).alias("cell")
+
     bucketed = hot_keys.select(
         "doc_id",
         "block_key",
@@ -386,13 +396,7 @@ def salted_candidate_pairs(
     )
     salted = bucketed.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                all_cells,
-                lambda c: ((c["role"] == F.lit("l")) & (c["x"] == F.col("bucket")))
-                | ((c["role"] == F.lit("r")) & (c["y"] == F.col("bucket"))),
-            )
-        ).alias("cell"),
+        built_once(("salted_cells", salt), build_cells),
         F.col("block_key"),
     ).select(
         "doc_id",

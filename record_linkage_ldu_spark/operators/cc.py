@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -48,8 +48,8 @@ from pyspark.sql.window import Window
 # a row-count cap and a BYTE cap before the driver union-find runs —
 # a row count alone mis-sizes long doc_ids (5M pairs of 60-char ids is
 # ~3GB of Python strings, not "a few hundred MB").  Bytes are estimated
-# from the actual checkpointed edge payload (sum of id lengths, one
-# cheap agg over the already-materialized edges) times a measured
+# from the actual checkpointed edge payload (sum of id lengths,
+# observed on the edge pin's own job) times a measured
 # in-memory expansion factor for Python str objects + the union-find
 # dict (~10x raw UTF-8 bytes).  Raise/lower via env on hosts with
 # different driver memory.
@@ -111,22 +111,29 @@ def connected_components(
     # the shuffle width for EVERY stage of this operator
     # (canonicalization, the star loop, the final cluster assembly) —
     # the edge set is typically ~2% of the pair stage the session
-    # width was sized for.
-    edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
+    # width was sized for.  The count and the raw id bytes of the
+    # auto gate are observed on the pin itself: no job of their own.
+    c1, c2 = edges.columns[:2]
+    pinned = Observation("cc_edges")
+    edges = edges.observe(
+        pinned,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(
+                F.length(F.col(c1).cast("string"))
+                + F.length(F.col(c2).cast("string"))
+            ),
+            F.lit(0),
+        ).alias("raw_bytes"),
+    ).localCheckpoint(eager=True)
+    observed = pinned.get
+    n_edges = observed["n"]
     if method == "auto":
-        fits = n_edges <= DRIVER_UF_MAX_EDGES
-        if fits and n_edges > 0:
-            raw_bytes = edges.agg(
-                F.coalesce(
-                    F.sum(
-                        F.length(F.col("doc_id_1"))
-                        + F.length(F.col("doc_id_2"))
-                    ),
-                    F.lit(0),
-                )
-            ).collect()[0][0]
-            fits = raw_bytes * _PY_STR_EXPANSION <= DRIVER_UF_MAX_BYTES
+        fits = (
+            n_edges <= DRIVER_UF_MAX_EDGES
+            and observed["raw_bytes"] * _PY_STR_EXPANSION
+            <= DRIVER_UF_MAX_BYTES
+        )
         method = "driver-uf" if fits else "alternating-star"
     if method == "driver-uf":
         return _driver_uf_clusters(edges, vertices)

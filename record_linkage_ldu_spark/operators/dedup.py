@@ -15,7 +15,6 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import lru_cache
 
 import pandas as pd
@@ -174,16 +173,6 @@ def exact_duplicates(
         )
         .where(F.col("n_docs") > 1)
     )
-
-
-def sql_exact_duplicates(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:
-    return f"""
-        SELECT md5({text_col}) AS fingerprint,
-               min({id_col}) AS canonical_id,
-               count(*) AS n_docs
-        FROM {table}
-        GROUP BY 1 HAVING count(*) > 1
-    """
 
 
 # ------------------------------------------------------------------

@@ -92,17 +92,6 @@ def validate_clusters(clusters: DataFrame) -> dict:
     }
 
 
-def cluster_size_distribution(clusters: DataFrame) -> DataFrame:
-    """size -> number of clusters of that size (histogram, G2)."""
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(F.count("*").alias("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(F.count("*").alias("n_clusters"))
-        .orderBy("cluster_size")
-    )
-
-
 def clusters_to_pairs(clusters: DataFrame) -> DataFrame:
     """Implied matched pairs of a clustering (for pairwise P/R/F1):
     all unordered within-cluster pairs.  Self-join per cluster — at

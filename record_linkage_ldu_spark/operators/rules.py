@@ -94,19 +94,6 @@ def sql_cross_rule_predicate(prefix: str = "") -> str:
     return " OR ".join(sql_cross_rule_masks(prefix))
 
 
-def sql_self_rule_predicate(prefix: str = "") -> str:
-    """DuckDB oracle fragment for the self-dedup match predicate."""
-    p = prefix
-    return (
-        f"({p}score >= 4.9) OR "
-        f"({p}score >= 3.4 AND {p}name >= 0.7 AND "
-        f"({p}email >= 0.8 OR {p}phone >= 0.9 OR {p}fax >= 0.8)) OR "
-        f"({p}score >= 3.4 AND {p}city >= 0.9 AND {p}state >= 0.9 AND "
-        f"{p}zip >= 0.9 AND {p}country >= 0.9 AND {p}address >= 1.0) OR "
-        f"({p}name = 1.0 OR {p}email = 1.0 OR {p}phone = 1.0)"
-    )
-
-
 def review_queue(
     scored: DataFrame,
     threshold: float = 4.9,

@@ -9,9 +9,11 @@
             --combined score + rules--> matches     (codegen arithmetic)
             --connected components--> clusters      (iterative joins)
 
-Every stage is materialized through ``StageStore`` (Parquet + manifest
-+ per-partition metrics), which is what makes a killed run resume
-without recomputing finished stages (north rule).  ``checkpoints=False``
+Every stage is materialized through ``StageStore`` (Parquet + a
+manifest whose row count is observed on the data write; per-partition
+metrics are derived from the committed data when asked), which is what
+makes a killed run resume without recomputing finished stages (north
+rule).  ``checkpoints=False``
 runs the same lazy plan end-to-end (benchmark mode).
 """
 

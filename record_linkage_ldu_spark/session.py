@@ -134,3 +134,11 @@ def built_once(key, build):
         if key not in _BUILT:
             _BUILT[key] = build()
         return _BUILT[key]
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes on, the
+    default), for expressions built as one ``F.expr`` string: a single
+    py4j round-trip where the same tree built Column by Column costs
+    several per node."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -9,14 +9,18 @@ layer:
   * ``StageStore`` writes each stage as Parquet (Iceberg ``writeTo``
     when a catalog is configured — same schemas either way; no Iceberg
     runtime jar ships in this sandbox) plus a JSON manifest
-    ``{stage, fingerprint, rows, partitions, wall_s, status}``.
+    ``{stage, fingerprint, rows, partitions, wall_s, status}``.  The
+    commit runs one Spark job set, the data write: ``rows`` is observed
+    on that write and the committed data is read back with the schema
+    the engine already holds (no footer-inference job).
   * A stage whose manifest is ``complete`` AND whose input fingerprint
     matches is **loaded, not recomputed** — that is the resume path.
     Writes go to a temp location and are committed by atomic rename,
     so a kill mid-write never leaves a "complete" manifest.
-  * ``partition_metrics`` records per-partition row counts
-    (``spark_partition_id``) into ``<stage>_metrics`` — the lineage
-    table used for skew diagnosis.
+  * ``StageStore.metrics`` derives per-partition row counts
+    (``spark_partition_id``, ``partition_metrics``) from the committed
+    data when asked — the lineage table used for skew diagnosis; the
+    commit itself writes no metrics table.
 """
 
 from __future__ import annotations
@@ -27,15 +31,15 @@ import shutil
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_stage_manifest.json"
 
 
 def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition row counts — one narrow agg, no extra scan when
-    chained before a write."""
+    """Per-partition row counts — one narrow agg over ``df``'s own
+    partitioning."""
     return (
         df.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -46,6 +50,14 @@ def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
             "rows",
         )
     )
+
+
+def observed_rows(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed as ``rows`` on the next action
+    that runs it: the count arrives with that action, not a job of its
+    own."""
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 @dataclass
@@ -97,8 +109,8 @@ class StageStore:
 
         Resume path: manifest complete + fingerprint match -> read the
         parquet back (no recompute).  Otherwise compute, write to
-        ``<stage>.tmp``, write metrics, then atomically rename and
-        stamp the manifest.
+        ``<stage>.tmp`` with the row count observed on that write, then
+        stamp the manifest and atomically rename.
         """
         sdir = self._stage_dir(stage)
         if self.is_complete(stage, fingerprint):
@@ -119,20 +131,24 @@ class StageStore:
         tmp = sdir + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp, exist_ok=True)
-        df.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-        out = self.spark.read.parquet(os.path.join(tmp, "data"))
-        partition_metrics(out, stage).write.mode("overwrite").parquet(
-            os.path.join(tmp, "metrics")
+        observed, written = observed_rows(df, f"stage_{stage}")
+        observed.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
+        # the engine's schema, not the file footers: inferring it back
+        # is a Spark job per read
+        schema = df.schema
+        partitions = (
+            self.spark.read.schema(schema)
+            .parquet(os.path.join(tmp, "data"))
+            .rdd.getNumPartitions()
         )
-        rows = out.count()
         wall = time.time() - t0
         with open(os.path.join(tmp, MANIFEST_NAME), "w") as f:
             json.dump(
                 {
                     "stage": stage,
                     "fingerprint": fingerprint,
-                    "rows": rows,
-                    "partitions": out.rdd.getNumPartitions(),
+                    "rows": written.get["rows"],
+                    "partitions": partitions,
                     "wall_s": round(wall, 3),
                     "status": "complete",
                 },
@@ -142,16 +158,20 @@ class StageStore:
         shutil.rmtree(sdir, ignore_errors=True)
         os.replace(tmp, sdir)
         return StageResult(
-            df=self.spark.read.parquet(os.path.join(sdir, "data")),
+            df=self.spark.read.schema(schema).parquet(
+                os.path.join(sdir, "data")
+            ),
             resumed=False,
             wall_s=wall,
         )
 
     def metrics(self, stage: str) -> DataFrame | None:
-        p = os.path.join(self._stage_dir(stage), "metrics")
+        """Per-partition row counts of the committed data of ``stage``
+        (None before its first commit), computed when called."""
+        p = os.path.join(self._stage_dir(stage), "data")
         if not os.path.exists(p):
             return None
-        return self.spark.read.parquet(p)
+        return partition_metrics(self.spark.read.parquet(p), stage)
 
     def clear(self, stage: str | None = None) -> None:
         if stage is None:

@@ -24,7 +24,6 @@ import zipfile
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # fixed zip timestamps: byte-stable output for identical input
 _ZIP_DT = (2020, 1, 1, 0, 0, 0)

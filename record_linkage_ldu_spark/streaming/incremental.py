@@ -361,6 +361,7 @@ def incremental_linkage_batch(
         with_combined_score,
     )
     from ..plans.linkage import LinkageConfig, records_view
+    from ..sources.io import observed_rows
 
     cfg = cfg or LinkageConfig()
     _reject_sparsify(cfg)
@@ -377,8 +378,14 @@ def incremental_linkage_batch(
     have_store = os.path.exists(records_path)
     tomb = _read_tombstones(spark, store_dir)
     new_docs = new_documents.dropDuplicates(["doc_id"])
+    # every store table is read back with the schema of this batch's
+    # own frame (analysis only): inferring it from the Parquet footers
+    # costs a Spark job per table
+    records_schema = records_view(new_docs, cfg).schema
     if have_store:
-        old_records_raw = spark.read.parquet(records_path)
+        old_records_raw = spark.read.schema(records_schema).parquet(
+            records_path
+        )
         old_records = _anti_tombstones(old_records_raw, tomb, "doc_id")
         # idempotent replay: a doc already in the store is not "new";
         # a TOMBSTONED id is not re-ingested either (deletion is
@@ -391,7 +398,11 @@ def incremental_linkage_batch(
             tomb,
             "doc_id",
         )
-    new_records = records_view(new_docs, cfg).localCheckpoint(eager=True)
+    # the batch counters are observed on the pins that already run
+    new_records, new_obs = observed_rows(
+        records_view(new_docs, cfg), "batch_new_docs"
+    )
+    new_records = new_records.localCheckpoint(eager=True)
     all_records = (
         old_records.unionByName(new_records) if have_store else new_records
     )
@@ -403,9 +414,13 @@ def incremental_linkage_batch(
     new_counts = new_keys.groupBy("block_key").agg(
         F.count("*").alias("_n_new")
     )
+    new_census = new_counts.select(
+        "block_key", F.col("_n_new").alias("block_size")
+    )
     if have_store and os.path.exists(census_path):
         census = (
-            spark.read.parquet(census_path)
+            spark.read.schema(new_census.schema)
+            .parquet(census_path)
             .join(new_counts, "block_key", "full_outer")
             .select(
                 "block_key",
@@ -416,9 +431,7 @@ def incremental_linkage_batch(
             )
         )
     else:
-        census = new_counts.select(
-            "block_key", F.col("_n_new").alias("block_size")
-        )
+        census = new_census
     # pinned: feeds the tier filters now and is persisted at the end
     # (overwriting the file it was derived from)
     census = census.localCheckpoint(eager=True)
@@ -429,14 +442,18 @@ def incremental_linkage_batch(
     touched = new_keys.select("block_key").distinct()
     if have_store and os.path.exists(keys_path):
         store_keys = _anti_tombstones(
-            spark.read.parquet(keys_path), tomb, "doc_id"
+            spark.read.schema(new_keys.schema).parquet(keys_path),
+            tomb,
+            "doc_id",
         ).join(F.broadcast(touched), "block_key", "left_semi")
     else:
         # empty frame from new_keys' OWN schema: a hardcoded DDL string
         # diverges from later batches when doc ids are non-string
         store_keys = spark.createDataFrame([], new_keys.schema)
-    all_keys = new_keys.unionByName(store_keys).localCheckpoint(eager=True)
-    n_key_rows = all_keys.count()
+    all_keys, key_obs = observed_rows(
+        new_keys.unionByName(store_keys), "batch_key_rows"
+    )
+    all_keys = all_keys.localCheckpoint(eager=True)
 
     # new x (old ∪ new): old-old pairs cannot appear (left side is
     # always new); new-new pairs appear in both orientations and
@@ -484,24 +501,33 @@ def incremental_linkage_batch(
     wide = attach_pair_sides(pairs, all_records, SELF_COMPARE_FIELDS)
     # pinned: counted here, filtered into the match edges below — an
     # unpinned plan would run the whole scoring chain once per use
-    scored = with_combined_score(
-        score_pairs_self(wide, with_jw=cfg.with_jw), mode="self"
-    ).localCheckpoint(eager=True)
-    n_scored = scored.count()
+    scored, scored_obs = observed_rows(
+        with_combined_score(
+            score_pairs_self(wide, with_jw=cfg.with_jw), mode="self"
+        ),
+        "batch_scored",
+    )
+    scored = scored.localCheckpoint(eager=True)
     new_edges = rules.match(scored, "self").select("doc_id_1", "doc_id_2")
 
     if have_store and os.path.exists(edges_path):
         edges = _anti_tombstones(
-            spark.read.parquet(edges_path), tomb, "doc_id_1", "doc_id_2"
+            spark.read.schema(new_edges.schema).parquet(edges_path),
+            tomb,
+            "doc_id_1",
+            "doc_id_2",
         ).unionByName(new_edges)
     else:
         edges = new_edges
-    n_edges = edges.count()
 
+    # counted by the job of connected_components' own edge pin
+    edges, edge_obs = observed_rows(edges, "batch_edges")
     # pinned: feeds the id carryover twice, the entity-id join and the
     # clusters overwrite
     clusters = connected_components(
-        edges, vertices=all_records.select("doc_id"), method=cfg.cc_method
+        edges,
+        vertices=all_records.select("doc_id"),
+        method=cfg.cc_method,
     ).localCheckpoint(eager=True)
 
     # persistent entity ids: CC labels are min-member doc_ids, so a
@@ -515,7 +541,10 @@ def incremental_linkage_batch(
     # collide with a carried earlier mint.  At scale, compact old seqs
     # out on the same cadence as any other append-table maintenance.
     if have_store and os.path.exists(ids_path):
-        stored_ids = spark.read.parquet(ids_path)
+        ids_schema = clusters.selectExpr(
+            "doc_id", "cluster_id AS stable_id", "0 AS seq"
+        ).schema
+        stored_ids = spark.read.schema(ids_schema).parquet(ids_path)
         cur_seq = stored_ids.agg(F.max("seq")).collect()[0][0] or 0
         prev_map = stored_ids.where(F.col("seq") == cur_seq).select(
             "doc_id", F.col("stable_id").alias("cluster_id")
@@ -543,7 +572,7 @@ def incremental_linkage_batch(
         F.countDistinct("stable_id").alias("entities"),
     ).first()
 
-    n_new = new_records.count()
+    n_new = new_obs.get["rows"]
     # the drop tier holds blocks past max_block_size * salt_drop_factor
     # keys each, so it is a handful of rows: collect it whole
     dropped_keys = [r[0] for r in dropped.select("block_key").collect()]
@@ -575,9 +604,9 @@ def incremental_linkage_batch(
     return {
         "docs": totals["docs"],
         "new_docs": n_new,
-        "pairs_scored": n_scored,
-        "candidate_key_rows": n_key_rows,
-        "edges": n_edges,
+        "pairs_scored": scored_obs.get["rows"],
+        "candidate_key_rows": key_obs.get["rows"],
+        "edges": edge_obs.get["rows"],
         "clusters": totals["clusters"],
         "entities": totals["entities"],
         "dropped_blocks": len(dropped_keys),

@@ -398,8 +398,6 @@ def test_pq_lossless_when_codebook_covers_corpus(spark):
     out = pq_topk(vecs, cb, codes, k=3, m=m, dim=dim).collect()
 
     # brute-force integer-grid L2 on the driver
-    import math
-
     def grid(v):
         return [round(x * 1_000_000.0) for x in v]
 

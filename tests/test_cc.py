@@ -455,12 +455,6 @@ def test_progressive_schedule_front_loads_true_matches(spark):
     from record_linkage_ldu_spark.operators.evaluate import (
         progressive_recall_curve,
     )
-    from record_linkage_ldu_spark.operators.blocking import (
-        block_census,
-        global_ranks,
-    )
-    from pyspark.sql import functions as F
-
     # t1/t2: share blocks K1 AND K2 (true match). r1/r2: share only
     # rare block K3 (true match). crowd c0..c7: one 8-doc block KBIG
     # (28 false pairs). m1/m2: labeled true but share NO block.
@@ -748,8 +742,6 @@ def test_pagerank_star_and_floor(spark):
     isolated node sits exactly at the (1-d)/N floor, total mass stays
     <= 1 (dangling mass not redistributed), and one hand-computed
     iteration matches."""
-    from pyspark.sql import functions as F
-
     from record_linkage_ldu_spark.operators.cc import pagerank
 
     edges = spark.createDataFrame(
@@ -827,3 +819,64 @@ def test_topk_edge_sparsify_busts_hairball(spark):
         ).collect()
     }
     assert [p for p in union_kept if "h" in p]
+
+
+@pytest.mark.parametrize("gate", ["edges", "bytes"])
+def test_cc_auto_gate_on_both_sides_of_the_cap(spark, monkeypatch, gate):
+    """The auto gate reads the edge count and the raw id bytes observed
+    on the edge pin: at the cap it picks the driver union-find, one
+    below it the distributed star loop, and both give the clusters of
+    a plain union-find."""
+    import random
+
+    from record_linkage_ldu_spark.operators import cc as cc_mod
+
+    rng = random.Random(11)
+    nodes = [f"n{i:02d}" for i in range(60)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(45)]
+    df = spark.createDataFrame(edges, ["doc_id_1", "doc_id_2"])
+    verts = spark.createDataFrame([(n,) for n in nodes], ["doc_id"])
+
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    expected = {n: find(n) for n in nodes}
+
+    at_cap = (
+        len(edges)
+        if gate == "edges"
+        else sum(len(a) + len(b) for a, b in edges) * cc_mod._PY_STR_EXPANSION
+    )
+    cap = "DRIVER_UF_MAX_EDGES" if gate == "edges" else "DRIVER_UF_MAX_BYTES"
+    for limit, path in (
+        (at_cap, "_driver_uf_clusters"),
+        (at_cap - 1, "_alternating_star"),
+    ):
+        taken = []
+
+        def recording(name):
+            real = getattr(cc_mod, name)
+
+            def call(*args, **kwargs):
+                taken.append(name)
+                return real(*args, **kwargs)
+
+            return call
+
+        for name in ("_driver_uf_clusters", "_alternating_star"):
+            monkeypatch.setattr(cc_mod, name, recording(name))
+        monkeypatch.setattr(cc_mod, cap, limit)
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components(df, vertices=verts, method="auto").collect()
+        }
+        monkeypatch.undo()
+        assert taken == [path], (limit, taken)
+        assert got == expected, limit

@@ -132,7 +132,6 @@ def test_merge_recompare_complementary_evidence(spark):
     import sys, os
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
-    from pyspark.sql import functions as F
 
     none = {f: None for f in E._PAIR_FIELDS}
     rows = [

@@ -2,11 +2,17 @@
 second build of the normalize, blocking and scoring plans reuses the
 cached Columns, runs the same plan and gives the same rows."""
 
+import gc
+
 import py4j.clientserver
 from pyspark import SparkContext
 from pyspark.sql import functions as F
 
-from record_linkage_ldu_spark.operators.blocking import block_keys
+from record_linkage_ldu_spark import session
+from record_linkage_ldu_spark.operators.blocking import (
+    block_keys,
+    generate_candidates,
+)
 from record_linkage_ldu_spark.operators.scoring import (
     attach_pair_sides,
     score_pairs_self,
@@ -21,6 +27,27 @@ def _rows(df):
 
 def _insets(df) -> int:
     return df._jdf.queryExecution().optimizedPlan().toString().count(" INSET ")
+
+
+def _round_trips(monkeypatch, build):
+    """py4j round-trips of ``build()`` (collected garbage first, so
+    proxy deletes of earlier builds are not counted)."""
+    calls = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    gc.collect()
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counted
+    )
+    try:
+        out = build()
+    finally:
+        monkeypatch.undo()
+    return out, calls[0]
 
 
 def test_records_view_second_build_is_cached(spark, tiny_gen, monkeypatch):
@@ -92,3 +119,45 @@ def test_built_once_never_crosses_gateways(monkeypatch):
 
     c = built_once(key, build)
     assert c is not a and c is not b and len(built) == 3
+
+
+def test_records_view_first_build_round_trips(spark, tiny_gen, monkeypatch):
+    """The first build in a gateway: the lookup maps and the span
+    filters are one SQL string each (~6.9k round-trips when they were
+    built literal by literal, ~3.5k since), and the plan is the same:
+    one stopword InSet per filtered field."""
+    docs = tiny_gen.select("doc_id", "spans")
+    cached = session._BUILT.copy()
+    session._BUILT.clear()
+    try:
+        first, calls = _round_trips(
+            monkeypatch, lambda: records_view(docs, LinkageConfig())
+        )
+    finally:
+        session._BUILT.update(cached)
+    assert calls < 4500, calls
+    assert _insets(first) == 16
+    assert _rows(first.drop("spans")) == _rows(
+        records_view(docs, LinkageConfig()).drop("spans")
+    )
+
+
+def test_generate_candidates_second_build_round_trips(
+    spark, tiny_gen, monkeypatch
+):
+    """A repeat candidate build reuses the salted triangle-cell array
+    (~3.8-4.9k round-trips per build when it was rebuilt every time,
+    ~1.6k since) and yields the same pairs."""
+    cfg = LinkageConfig()
+    records = records_view(tiny_gen.select("doc_id", "spans"), cfg).drop(
+        "spans"
+    ).localCheckpoint(eager=True)
+    first, _ = generate_candidates(records, cfg.blocking, materialize_keys=True)
+    (second, _), calls = _round_trips(
+        monkeypatch,
+        lambda: generate_candidates(
+            records, cfg.blocking, materialize_keys=True
+        ),
+    )
+    assert calls < 2500, calls
+    assert _rows(first) == _rows(second)

@@ -11,9 +11,7 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 import subprocess
-import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -183,7 +183,9 @@ def main(sf_dir: str, out_dir: str) -> None:
     # clusters, the rows a clerical reviewer opens first
     worst = (
         qs["cluster_cohesion"](spark, sf_dir)
-        .orderBy(F.col("density").asc(), F.col("n_members").desc())
+        .orderBy(
+            F.col("density").asc(), F.col("n_members").desc(), F.col("cluster_id")
+        )
         .limit(10)
         .collect()
     )

@@ -37,8 +37,6 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    import pandas as pd
-
     from record_linkage_ldu_spark.operators import ann
     from record_linkage_ldu_spark.session import build_session
 
